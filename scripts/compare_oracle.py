@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """DuckDB oracle compare for graft.Verify output.
 
-Usage: python3 compare_r6.py <sf_dir> <verify_out>
+Usage: python3 scripts/compare_oracle.py <sf_dir> <verify_out>
 Registers every single-file .parquet table in <sf_dir> as a DuckDB view plus
 the per-query spark result dirs under <verify_out>, runs each oracle_sql.json
 entry, and diffs (rows, schema, hash) against the spark parquet. Hash = sha256
@@ -14,7 +14,9 @@ con = duckdb.connect()
 
 for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
     name = os.path.basename(p)[:-len(".parquet")]
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
+    ident = '"' + name.replace('"', '""') + '"'
+    path = p.replace("'", "''")
+    con.execute(f"CREATE VIEW {ident} AS SELECT * FROM read_parquet('{path}')")
 
 oracle = json.load(open(os.path.join(vout, "oracle_sql.json")))
 

@@ -134,27 +134,49 @@ object ChunkStats {
 
 /** Primitive open-addressing int set with a cardinality cap — no boxing in
   * the per-token stats pass. Once `cap` distinct values are seen it stops
-  * recording (dict becomes ineligible anyway).
+  * recording (dict becomes ineligible anyway). Starts at `initialCapacity`
+  * slots and doubles whenever the load would pass 0.5; the default sizes it
+  * for `cap` up front (load <= 0.25 at cap), so it never grows.
   */
-private[core] final class IntSet(cap: Int) {
-  private val capacity = Integer.highestOneBit(math.max(cap * 4, 16)) // load <= 0.25 at cap
-  private val mask = capacity - 1
-  private val slots = new Array[Int](capacity)
-  private val used = new Array[Boolean](capacity)
+private[graft] final class IntSet(cap: Int,
+                                  initialCapacity: Int = -1) {
+  private var capacity =
+    if (initialCapacity > 0) Integer.highestOneBit(math.max(initialCapacity - 1, 8)) << 1
+    else Integer.highestOneBit(math.max(cap * 4, 16))
+  private var slots = new Array[Int](capacity)
+  private var used = new Array[Boolean](capacity)
   var size = 0
   var overflowed = false
 
+  @inline private def home(v: Int): Int =
+    (v * 0x9e3779b1) >>> (32 - Integer.numberOfTrailingZeros(capacity)) & (capacity - 1)
+
   def add(v: Int): Unit = {
     if (overflowed) return
-    var idx = (v * 0x9e3779b1) >>> (32 - Integer.numberOfTrailingZeros(capacity)) & mask
+    val mask = capacity - 1
+    var idx = home(v)
     while (used(idx)) {
       if (slots(idx) == v) return
       idx = (idx + 1) & mask
     }
     if (size >= cap) { overflowed = true; return }
+    if (2 * (size + 1) > capacity) { grow(); add(v); return }
     used(idx) = true
     slots(idx) = v
     size += 1
+  }
+
+  private def grow(): Unit = {
+    val (oldSlots, oldUsed) = (slots, used)
+    capacity *= 2
+    slots = new Array[Int](capacity)
+    used = new Array[Boolean](capacity)
+    size = 0
+    var i = 0
+    while (i < oldSlots.length) {
+      if (oldUsed(i)) add(oldSlots(i))
+      i += 1
+    }
   }
 
   def toSortedArray: Array[Int] = {

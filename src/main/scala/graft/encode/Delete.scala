@@ -33,13 +33,26 @@ import org.apache.spark.sql.functions._
   * [[ChunkWalker]]; crc is refreshed. Untouched chunks (no hit in the delete
   * set) pass through byte-identical.
   *
-  * Scale shape (100 TB): the hit derivation reads ONLY the id slab +
-  * chunk_id (column pruning keeps the data plane out of the scan), shuffles
-  * (doc_id) pairs — never payloads — and aggregates per-chunk drop lists
-  * bounded by the chunk row cap; the rewrite joins those small lists back to
-  * the chunk table (broadcast under AQE when the dirty-chunk fraction is
-  * small, the common case). Cost is priced by the deleted fraction, not the
-  * corpus size.
+  * Scale shape (100 TB): the plan branches on Spark's own size estimate of
+  * the id set, under the rule Spark's planner uses to broadcast a join side
+  * (`sizeInBytes <= spark.sql.autoBroadcastJoinThreshold`, threshold −1
+  * disables it):
+  *
+  *   - broadcast branch (the common case — a takedown list or a dedup loser
+  *     set is small next to the corpus): the ids are collected once into a
+  *     hash set, broadcast, and every chunk is probed and rewritten in ONE
+  *     map pass over the chunk table — one scan, no exchange;
+  *   - shuffle branch (id set over the threshold, or broadcasts disabled):
+  *     the hit derivation reads ONLY the id slab + chunk_id (column pruning
+  *     keeps the data plane out of the scan), shuffles (doc_id) pairs —
+  *     never payloads — and aggregates per-chunk drop lists bounded by the
+  *     chunk row cap; the rewrite joins those small lists back to the chunk
+  *     table. This is the branch that handles an id set too big to hold in
+  *     one task.
+  *
+  * Both branches hand the same sorted drop ordinals to [[deleteChunk]], so
+  * they write the same chunks byte for byte. Cost is priced by the deleted
+  * fraction, not the corpus size.
   */
 object Delete {
 
@@ -52,10 +65,32 @@ object Delete {
     */
   def delete(chunks: DataFrame, docIds: DataFrame): Dataset[EncodedChunk] = {
     val spark = chunks.sparkSession
+    val ids = docIds.select(col(docIds.columns.head).cast("string").as("doc_id"))
+    val estimate = ids.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (estimate >= 0 && estimate <= threshold) deleteBroadcast(chunks, ids)
+    else deleteShuffled(chunks, ids)
+  }
+
+  /** One map pass: probe each chunk's id slab against a broadcast set. */
+  private def deleteBroadcast(chunks: DataFrame, ids: DataFrame): Dataset[EncodedChunk] = {
+    val spark = chunks.sparkSession
     import spark.implicits._
-    val ids = docIds
-      .select(col(docIds.columns.head).cast("string").as("doc_id"))
-      .distinct()
+    val doomed = new java.util.HashSet[String]()
+    ids.as[String].collect().foreach(id => if (id != null) doomed.add(id))
+    val bc = spark.sparkContext.broadcast(doomed)
+    chunks.as[EncodedChunk].flatMap { c =>
+      val set = bc.value
+      val rowIds = PackedIds.unpackAll(c.doc_ids, c.row_count)
+      val drop = Array.range(0, c.row_count).filter(i => set.contains(rowIds(i)))
+      if (drop.isEmpty) Iterator.single(c) else deleteChunk(c, drop).iterator
+    }
+  }
+
+  /** Hit scan over the id plane, shuffled per-chunk drop lists, join back. */
+  private def deleteShuffled(chunks: DataFrame, ids: DataFrame): Dataset[EncodedChunk] = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
     // metadata-plane hit scan: chunk_id + packed id slab only
     val meta = chunks.select(col("chunk_id"), col("row_count"), col("doc_ids"))
       .as[(Long, Int, Array[Byte])]
@@ -64,7 +99,7 @@ object Delete {
         Iterator.tabulate(n)(i => (cid, i, arr(i)))
       }
       .toDF("chunk_id", "row_idx", "doc_id")
-    val hits = meta.join(ids, "doc_id")
+    val hits = meta.join(ids.distinct(), "doc_id")
       .groupBy(col("chunk_id"))
       .agg(sort_array(collect_list(col("row_idx"))).as("drop"))
       .as[DropRows]

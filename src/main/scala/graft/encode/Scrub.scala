@@ -199,15 +199,16 @@ object Scrub {
   }
 
   /** Streaming stats over rewritten values: zone map, blooms, distinct count
-    * (exact via hash set — bounded by the chunk's token count), max run.
-    * Shared with [[Truncate]]'s stats recomputation.
+    * (exact up to 2^20 via a primitive set that grows with the chunk's
+    * distinct tokens), max run. Shared with [[Truncate]]'s stats
+    * recomputation.
     */
   private[encode] final class StatsAcc {
     var minTok: Int = Int.MaxValue
     var maxTok: Int = Int.MinValue
     var maxRun: Int = 0
     val bloom = new Array[Byte](ChunkStats.BloomBytes)
-    private val seen = new java.util.HashSet[Integer]()
+    private val seen = new IntSet(1 << 20, initialCapacity = 256)
     private var lastVal = 0
     private var lastRun = 0
     private var any = false
@@ -217,7 +218,7 @@ object Scrub {
       if (any && v == lastVal) lastRun += len
       else { lastVal = v; lastRun = len; any = true }
       if (lastRun > maxRun) maxRun = lastRun
-      if (seen.size < (1 << 20)) seen.add(v)
+      seen.add(v)
       ChunkStats.bloomSet(bloom, v)
     }
     /** Runs never span rows — reset the run cursor at each row boundary. */

@@ -44,7 +44,7 @@ case class ShingleHashes(child: Expression, n: Int)
     // sort-then-unique == distinct-then-sort on primitives, without the
     // boxed per-row HashSet that Array.distinct allocates
     java.util.Arrays.sort(out)
-    var w = 1
+    var w = if (out.isEmpty) 0 else 1
     i = 1
     while (i < out.length) {
       if (out(i) != out(w - 1)) { out(w) = out(i); w += 1 }

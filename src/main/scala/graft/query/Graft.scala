@@ -462,12 +462,14 @@ object Graft {
     * per-chunk stats is added BEFORE the matcher expression. On a
     * parquet-backed chunk table (TableIO.readChunks) Spark pushes the nested
     * `stats.min_tok`/`stats.max_tok` comparisons into the scan
-    * (PushedFilters → row-group statistics + column-index page pruning), so
-    * chunks that cannot match are skipped WITHOUT reading their data blobs
-    * off storage — files whose every row group is excluded cost one footer
-    * read. That is the 100-TB form of chunk skipping: the in-expression
-    * gates (zone map, blooms, set cover) save CPU after the bytes arrive;
-    * this conjunct saves the I/O itself. Conservative and exact-safe: the
+    * (PushedFilters → row-group statistics + column-index page pruning).
+    * That skips I/O only where a row group's chunks share a narrow token
+    * range. A table `EncodeJob.encode` writes has no such layout — each row
+    * group mixes all buckets and sources, so its min_tok/max_tok span the
+    * whole token domain and no row group is skipped (every chunk's bytes
+    * are read). What this conjunct saves there is CPU: the filter drops
+    * non-matching chunks before the matcher runs, like the in-expression
+    * gates (zone map, blooms, set cover). Conservative and exact-safe: the
     * matcher still evaluates the surviving chunks.
     */
   /** The zone-gated column projection feeding the late-materialization RDD

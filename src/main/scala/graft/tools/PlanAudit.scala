@@ -389,20 +389,29 @@ object PlanAudit {
         s"mid-window slices over one shared alias must all push; no decode_row:\n$p")
       println("projection: decode_slice ×4 through the shared alias, decode_row pruned")
     }
-    println("=== [17] round-5 deletion: hit scan reads the id plane only, no nested loops ===")
+    println("=== [17] deletion: broadcast branch is one scan; shuffle branch prunes its hit scan ===")
     locally {
       val doomed = spark.range(0, 50)
         .select((col("id") * 3).cast("string").as("doc_id"))
-      val del = graft.encode.Delete.delete(chunks, doomed).toDF()
-      val p = del.queryExecution.executedPlan.toString
+      // small id set: one chunk-table scan, rewritten in one map pass
+      val bc = graft.encode.Delete.delete(chunks, doomed).toDF()
+      val pb = bc.queryExecution.executedPlan.toString
+      require(pb.linesIterator.count(_.contains("Scan parquet")) == 1 && !pb.contains("Exchange"),
+        s"broadcast-branch delete must be one chunk-table scan, no Exchange:\n$pb")
+      // broadcasts off: the shuffle branch
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      spark.conf.set(key, "-1")
+      val p = try graft.encode.Delete.delete(chunks, doomed).toDF().queryExecution.executedPlan.toString
+      finally spark.conf.unset(key)
       // the hit derivation's chunk-table scan must be pruned to the id
       // plane: chunk_id + row_count + doc_ids, never the data blob
       require(p.linesIterator.exists(l => l.contains("ReadSchema") &&
         l.contains("doc_ids") && !l.contains("data:")),
-        s"delete hit scan must read the id plane only:\n$p")
+        s"shuffle-branch delete hit scan must read the id plane only:\n$p")
       require(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        s"delete must join on keys only:\n$p")
-      println("delete: id-plane-only hit scan (ReadSchema pruned), key joins only")
+        s"shuffle-branch delete must join on keys only:\n$p")
+      println("delete: broadcast branch one scan, no Exchange; " +
+        "shuffle branch id-plane-only hit scan (ReadSchema pruned), key joins only")
     }
     spark.stop()
   }

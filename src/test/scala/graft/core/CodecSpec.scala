@@ -97,6 +97,18 @@ class CodecSpec extends AnyFunSuite {
     vals.foreach(v => assert(r.readZigZag() == v))
   }
 
+  test("int set counts distinct values exactly up to its cap, growing or presized") {
+    val genVals = Gen.choose(0, 3000).flatMap(n => Gen.listOfN(n, Gen.choose(-2000, 2000)))
+    checkProp(Prop.forAll(genVals, Gen.oneOf(1, 5, 64, 1000, 1 << 20), Gen.oneOf(-1, 1, 16, 4096)) {
+      (xs, cap, initial) =>
+        val set = new IntSet(cap, initialCapacity = initial)
+        xs.foreach(set.add)
+        val d = xs.distinct
+        set.size == math.min(d.size, cap) && set.overflowed == (d.size > cap) &&
+          (set.overflowed || set.toSortedArray.toSeq == d.sorted)
+    }, 200)
+  }
+
   test("symtab serialization round-trips") {
     val st = new SymTab(Array(Array(1), Array(2, 3), Array(-5, 1000000, 7), Array.fill(8)(42)))
     val st2 = SymTab.fromBytes(st.toBytes)
@@ -115,6 +127,59 @@ class CodecSpec extends AnyFunSuite {
     // raw baseline: varint bytes + prefixes
     val rawBytes = stats.varintBytes + rows.length * 2
     assert(fsstBytes < rawBytes, s"fsst $fsstBytes !< raw $rawBytes")
+  }
+
+  // --- trainer vs the boxed reference: identical tables, byte for byte -----
+
+  private def sameTable(rows: IndexedSeq[Array[Int]], maxSample: Int, gens: Int): Boolean =
+    java.util.Arrays.equals(FsstTrainer.train(rows, maxSample, gens).toBytes,
+      ReferenceFsstTrainer.train(rows, maxSample, gens).toBytes)
+
+  /** Rows built from phrases of 9..20 tokens — longer than a symbol may be. */
+  private def longPhraseRows(seed: Int, nRows: Int): IndexedSeq[Array[Int]] = {
+    val rnd = new Random(seed)
+    val phrases = Array.fill(6)(Array.fill(SymTab.MaxSymbolLen + 1 + rnd.nextInt(12))(rnd.nextInt(5000)))
+    (0 until nRows).map(_ => Array.concat(Seq.fill(1 + rnd.nextInt(6))(phrases(rnd.nextInt(6))): _*))
+  }
+
+  private val genTrainRows: Gen[IndexedSeq[Array[Int]]] = Gen.oneOf(
+    Gen.const(IndexedSeq.empty[Array[Int]]),
+    Gen.const(IndexedSeq(Array.emptyIntArray, Array.emptyIntArray)),
+    Gen.choose(0, 1000).map(s => IndexedSeq(zipfRows(s, 400, 3000).flatten.toArray)),
+    Gen.choose(0, 1000).map(longPhraseRows(_, 60)),
+    Gen.choose(0, 1000).map(s => runsRows(s, 80)),
+    Gen.choose(0, 1000).map(s => zipfRows(s, 200, 50000)),
+    Gen.listOf(Gen.listOf(Gen.choose(0, 7)).map(_.toArray)).map(_.toIndexedSeq),
+    Gen.listOf(Gen.listOf(Gen.chooseNum(Int.MinValue, Int.MaxValue)).map(_.toArray)).map(_.toIndexedSeq)
+  )
+
+  test("trainer equals the reference trainer byte for byte (generated samples)") {
+    checkProp(Prop.forAll(genTrainRows, Gen.oneOf(1, 7, 100, 1000, FsstTrainer.DefaultSampleTokens),
+      Gen.oneOf(0, 1, 2, 5)) { (rows, maxSample, gens) =>
+      sameTable(rows, maxSample, gens)
+    }, 100)
+  }
+
+  test("trainer equals the reference trainer on named edge samples") {
+    val single = zipfRows(3, 400, 3000).flatten.toArray // one row far over budget
+    assert(sameTable(IndexedSeq.empty, 1000, 5))
+    assert(sameTable(IndexedSeq(single), FsstTrainer.DefaultSampleTokens, 5))
+    assert(sameTable(longPhraseRows(5, 200), FsstTrainer.DefaultSampleTokens, 5))
+    val rnd = new Random(11)
+    val low = Array.fill(12)(rnd.nextInt(1 << 20))
+    assert(sameTable((0 until 300).map(_ => Array.fill(50)(low(rnd.nextInt(12)))), 4096, 5))
+    assert(sameTable(zipfRows(7, 500, 32000), FsstTrainer.DefaultSampleTokens, 5))
+    // the budget runs out in the middle of a row: that row is still taken whole
+    val rows = (0 until 40).map(i => Array.tabulate(60)(j => (i * 7 + j) % 90))
+    for (budget <- Seq(1, 59, 60, 61, 119, 130); gens <- Seq(1, 5))
+      assert(sameTable(rows, budget, gens), s"budget $budget generations $gens")
+    // slab-backed rows whose offsets are a permutation of the arrival order
+    val zr = zipfRows(13, 300, 20000)
+    val slab = zr.flatten.toArray
+    val starts = zr.scanLeft(0)(_ + _.length).init.toArray.reverse
+    val lens = zr.map(_.length).toArray.reverse
+    val t = TokenRows.ofSlab(slab, starts, lens, zr.length)
+    assert(java.util.Arrays.equals(FsstTrainer.train(t).toBytes, ReferenceFsstTrainer.train(t).toBytes))
   }
 
   test("selector picks sensible codecs per distribution (FIXTURES.md §1)") {

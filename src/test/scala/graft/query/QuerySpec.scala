@@ -686,28 +686,48 @@ class QuerySpec extends AnyFunSuite {
     val want = input.toDF()
       .filter(col("doc_id").cast("bigint") % 3 =!= 0)
       .select(col("doc_id"), col("tokens"))
+    val ghost = Seq("no-such-doc-1", "no-such-doc-2").toDF("doc_id")
+    val all = input.toDF().select(col("doc_id"))
+    // Delete picks its branch from the id set's size estimate: the default
+    // threshold takes the broadcast branch (no join at all), −1 forces the
+    // shuffle branch (key joins); both must write the same chunks
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    def underBranch[T](shuffle: Boolean)(body: => T): T =
+      if (!shuffle) body
+      else {
+        spark.conf.set(threshold, "-1")
+        try body finally spark.conf.unset(threshold)
+      }
+    def joins(df: DataFrame): Boolean =
+      df.queryExecution.executedPlan.toString.linesIterator.exists(_.contains("Join"))
     for (codecName <- Seq("fsst", "dict", "rle", "for", "bitpack", "raw", "auto")) {
       val opts =
         if (codecName == "auto") EncodeOptions(numBuckets = 8, maxRowsPerChunk = 64)
         else EncodeOptions(numBuckets = 8, maxRowsPerChunk = 64, forceCodec = Some(codecName))
       val table = EncodeJob.encode(input, opts).toDF()
-      val kept = graft.encode.Delete.delete(table, doomed).toDF()
-      val got = EncodeJob.decodeDf(kept).select(col("doc_id"), col("tokens"))
-      assert(want.except(got).isEmpty && got.except(want).isEmpty,
-        s"$codecName: post-delete decode differs from decoded-domain filter")
-      // no-hit delete set → every chunk passes through byte-identical
-      val ghost = Seq("no-such-doc-1", "no-such-doc-2").toDF("doc_id")
-      val untouched = graft.encode.Delete.delete(table, ghost).toDF()
-      val lhs = untouched.select("chunk_id", "codec", "crc")
-      val rhs = table.select("chunk_id", "codec", "crc")
-      assert(lhs.except(rhs).isEmpty && rhs.except(lhs).isEmpty,
-        s"$codecName: no-hit delete did not pass chunks through byte-identical")
+      val crcs = for (shuffle <- Seq(false, true)) yield underBranch(shuffle) {
+        val branch = if (shuffle) "shuffle" else "broadcast"
+        val kept = graft.encode.Delete.delete(table, doomed).toDF()
+        assert(joins(kept) == shuffle, s"$codecName: delete did not take its $branch branch")
+        val got = EncodeJob.decodeDf(kept).select(col("doc_id"), col("tokens"))
+        assert(want.except(got).isEmpty && got.except(want).isEmpty,
+          s"$codecName/$branch: post-delete decode differs from decoded-domain filter")
+        // no-hit delete set → every chunk passes through byte-identical
+        val untouched = graft.encode.Delete.delete(table, ghost).toDF()
+        val lhs = untouched.select("chunk_id", "codec", "crc")
+        val rhs = table.select("chunk_id", "codec", "crc")
+        assert(lhs.except(rhs).isEmpty && rhs.except(lhs).isEmpty,
+          s"$codecName/$branch: no-hit delete did not pass chunks through byte-identical")
+        kept.select("chunk_id", "codec", "crc").as[(Long, String, Long)].collect().toSet
+      }
+      assert(crcs(0) == crcs(1), s"$codecName: the delete branches wrote different chunks")
     }
     // deleting EVERY document empties the table (chunks drop, not zero-row husks)
-    val all = input.toDF().select(col("doc_id"))
     val auto = EncodeJob.encode(input, EncodeOptions(numBuckets = 8, maxRowsPerChunk = 64)).toDF()
-    assert(graft.encode.Delete.delete(auto, all).count() == 0L,
-      "deleting all documents should drop every chunk")
+    for (shuffle <- Seq(false, true)) underBranch(shuffle) {
+      assert(graft.encode.Delete.delete(auto, all).count() == 0L,
+        "deleting all documents should drop every chunk")
+    }
   }
 
   test("compressed-domain truncate equals decoded-domain take per codec; pass-through byte-identical") {
