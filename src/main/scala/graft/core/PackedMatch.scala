@@ -200,8 +200,8 @@ object PackedAnchor {
 
   /** Per-(chunk, pattern) matcher: codec header parsed once, bitpack phase
     * images and range guards computed once, then [[evalRow]] per row slice.
-    * The chunk matcher builds one per chunk; the per-row expression caches
-    * one per header (HeaderCache in query.Expressions). `isFor = false`
+    * Built by PatternPredicate.prepare: once per chunk on the chunk scan,
+    * cached per (codec, header) on the per-row path. `isFor = false`
     * covers both bitpack (parts = token values) and dict (parts = dictionary
     * indices via [[prepareDict]]) — base-0 packed streams at a
     * chunk-constant width.

@@ -171,25 +171,4 @@ object RangeMatch {
     }
     false
   }
-
-  /** Dispatch on codec name over one row's compressed bytes. `header` is
-    * the chunk header; parsing is the caller's chance to amortize (the
-    * expressions cache per header) — this convenience form re-derives per
-    * call and is for tests/fallbacks.
-    */
-  def evalRow(codec: String, header: Array[Byte], bytes: Array[Byte],
-              from: Int, to: Int, lo: Int, hi: Int): Boolean = codec match {
-    case FsstTokenCodec.name =>
-      evalFsst(fsstCodeTable(SymTab.fromBytes(header), lo, hi), bytes, from, to, lo, hi)
-    case DictCodec.name =>
-      val dict = DictCodec.readDict(header)
-      val (iLo, iHi) = dictIndexRange(dict, lo, hi)
-      evalDict(bytes, from, to, BitPack.bitsFor(math.max(dict.length - 1, 0)), iLo, iHi)
-    case RleCodec.name => evalRle(bytes, from, to, lo, hi)
-    case BitPackCodec.name => evalBitpack(bytes, from, to, header(0) & 0xff, lo, hi)
-    case ForCodec.name => evalFor(bytes, from, to, header(0) & 0xff, lo, hi)
-    case RawCodec.name => evalRaw(bytes, from, to, lo, hi)
-    case other =>
-      evalDecoded(Codecs.byName(other).decoder(header).decode(bytes, from, to), lo, hi)
-  }
 }

@@ -194,25 +194,4 @@ object SetMatch {
     }
     false
   }
-
-  /** Per-row dispatch re-deriving header artifacts per call — tests and
-    * fallbacks only; the expressions cache per header. */
-  def evalRow(codec: String, header: Array[Byte], bytes: Array[Byte],
-              from: Int, to: Int, sorted: Array[Int]): Boolean = codec match {
-    case FsstTokenCodec.name =>
-      evalFsst(fsstCodeTable(SymTab.fromBytes(header), sorted), sorted, bytes, from, to)
-    case DictCodec.name =>
-      val dict = DictCodec.readDict(header)
-      dictIndexTable(dict, sorted) match {
-        case None => false
-        case Some(t) =>
-          evalDict(bytes, from, to, BitPack.bitsFor(math.max(dict.length - 1, 0)), t)
-      }
-    case RleCodec.name => evalRle(bytes, from, to, sorted)
-    case BitPackCodec.name => evalBitpack(bytes, from, to, header(0) & 0xff, sorted)
-    case ForCodec.name => evalFor(bytes, from, to, header(0) & 0xff, sorted)
-    case RawCodec.name => evalRaw(bytes, from, to, sorted)
-    case other =>
-      evalDecoded(Codecs.byName(other).decoder(header).decode(bytes, from, to), sorted)
-  }
 }

@@ -19,10 +19,9 @@ import org.apache.spark.sql.functions._
   *   `saltBuckets` buckets → no straggler task at 100 TB;
   * - bucket ids are a pure function of the row → reruns assign identical
   *   buckets, which is what makes manifest-based resume exact.
-  * Chunks never span (bucket, source) groups; chunk MEMBERSHIP and (by
-  * default) within-chunk row order follow shuffle arrival order, which the
-  * decode-equals-input invariant does not depend on (opt-in (n_tok, doc_id)
-  * sorting via EncodeOptions.sortRowsInChunk).
+  * Chunks never span (bucket, source) groups; chunk MEMBERSHIP and
+  * within-chunk row order follow shuffle arrival order, which the
+  * decode-equals-input invariant does not depend on.
   */
 final case class EncodeOptions(
     numBuckets: Int = 32,
@@ -31,15 +30,6 @@ final case class EncodeOptions(
     maxTokensPerChunk: Long = 1L << 19, // 512Ki tokens ≈ 2 MiB buffered per concurrent task
 
     forceCodec: Option[String] = None,
-    // Sort rows inside each chunk by (n_tok, doc_id). All shipped codecs
-    // encode rows independently, so the sort does not change compressed
-    // SIZE — it only canonicalizes within-chunk order. It costs the sort
-    // itself plus a cache-hostile PERMUTED read of the slab during encode
-    // (measured at local[32]); chunk MEMBERSHIP follows shuffle arrival
-    // order either way, so determinism guarantees are unchanged. Off by
-    // default; turn on when a consumer wants length-clustered rows inside
-    // chunks (e.g. future cross-row encodings).
-    sortRowsInChunk: Boolean = false,
     // Encode only these buckets (ResumableEncode's uncommitted-wave set).
     // Filtering INSIDE encode keeps the bucket computed once and lets a
     // bare-parquet-scan input keep the columnar pack path (an external
@@ -90,7 +80,6 @@ object EncodeJob {
     * unchanged (chunk MEMBERSHIP follows arrival order, as documented).
     */
   def encode(ds: Dataset[TokenRow], opts: EncodeOptions = EncodeOptions()): Dataset[EncodedChunk] = {
-    if (sys.props.get("graft.shuffle.mode").contains("rows")) return encodeRowShuffle(ds, opts)
     val spark = ds.sparkSession
     import spark.implicits._
     // Columnar fast path: when the input IS a bare parquet scan (the
@@ -101,9 +90,7 @@ object EncodeJob {
     // computed per row bit-identically to the SQL expression (Buckets.of).
     // Derived inputs (tokenization, filters — e.g. ResumableEncode's
     // uncommitted-bucket filter) take the row path below.
-    val columnar = if (sys.props.get("graft.map.mode").contains("rows")) None
-      else org.apache.spark.sql.GraftBridge.columnarScan(ds.toDF())
-    val packed = columnar match {
+    val packed = org.apache.spark.sql.GraftBridge.columnarScan(ds.toDF()) match {
       case Some((batches, names))
           if Seq("doc_id", "tokens", "n_tok", "source").forall(names.contains) =>
         val Seq(iDoc, iTok, iN, iSrc) =
@@ -137,26 +124,6 @@ object EncodeJob {
     val rdd = packed
       .partitionBy(new BucketPartitioner(reduceParts))
       .mapPartitions(it => new BlockChunkIterator(it, opts))
-    spark.createDataset(rdd)
-  }
-
-  /** Round-1 row-level shuffle (kept for A/B measurement via
-    * -Dgraft.shuffle.mode=rows / sys.props): every TokenRow travels as an
-    * UnsafeRow.
-    */
-  private def encodeRowShuffle(ds: Dataset[TokenRow], opts: EncodeOptions): Dataset[EncodedChunk] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val df = withBucket(ds.toDF(), opts)
-      .repartition(opts.numBuckets, col("__bucket"))
-      .select(col("__bucket"), col("doc_id"), col("tokens"), col("n_tok"), col("source"))
-    val rdd = org.apache.spark.sql.GraftBridge.toInternalRdd(df).mapPartitions { it =>
-      val typed = it.map { r =>
-        (r.getInt(0), TokenRow(r.getUTF8String(1).toString,
-          r.getArray(2).toIntArray(), r.getInt(3), r.getUTF8String(4).toString))
-      }
-      new ChunkIterator(typed, opts)
-    }
     spark.createDataset(rdd)
   }
 
@@ -223,22 +190,13 @@ object EncodeJob {
           s"chunk $chunkId: crc mismatch")
         val dec = graft.core.Codecs.byName(codecName).decoder(symtab)
         val offs = graft.format.Offsets.unpack(offBytes, rowCount)
+        // ids are views into docIds (fresh per chunk, shared across its rows)
+        val ids = new PackedIds.Cursor(docIds)
         new Iterator[InternalRow] {
           private var i = 0
-          private var idPos = 0
           def hasNext: Boolean = i < rowCount
           def next(): InternalRow = {
-            // inline varUInt over the packed id slab; the UTF8String is a
-            // VIEW into docIds (fresh per chunk, shared across its rows)
-            var len = 0
-            var shift = 0
-            var b = 0
-            do {
-              b = docIds(idPos) & 0xff; idPos += 1
-              len |= (b & 0x7f) << shift; shift += 7
-            } while ((b & 0x80) != 0)
-            val id = org.apache.spark.unsafe.types.UTF8String.fromBytes(docIds, idPos, len)
-            idPos += len
+            val id = ids.next()
             val toks = dec.decode(data, offs(i), offs(i + 1))
             i += 1
             new GenericInternalRow(Array[Any](
@@ -271,49 +229,61 @@ object EncodeJob {
   * token graph every collection); this accumulator keeps tokens in one
   * growing primitive array per group.
   *
-  * Rows are emitted in arrival order by default (every shipped codec
-  * encodes rows independently, so within-chunk order never changes
-  * compressed size; the optional (n_tok, doc_id) sort cost a permuted,
-  * cache-hostile slab read during encode). The engine's correctness
-  * invariant (decode == input, per-bucket resume) depends on neither
-  * membership nor order.
-  *
-  * Ingestion is pluggable: the row path pulls (bucket, TokenRow) pairs; the
-  * block path (the shipped encode) ingests whole map-side-combined blocks,
-  * decoding varints DIRECTLY into the group's primitive array — no per-row
-  * Array[Int] or TokenRow allocation on the reduce side.
+  * Input is (bucket, packedBlock) pairs from the map-side combine: one
+  * block = many rows of one (bucket, source) group, varint-decoded DIRECTLY
+  * into the group's primitive array — no per-row Array[Int] or TokenRow
+  * allocation on the reduce side. Rows are emitted in arrival order (every
+  * shipped codec encodes rows independently, so within-chunk order never
+  * changes compressed size); the engine's correctness invariant (decode ==
+  * input, per-bucket resume) depends on neither membership nor order.
   */
-private abstract class ChunkIteratorBase(opts: EncodeOptions)
+private final class BlockChunkIterator(
+    it: Iterator[(Int, Array[Byte])], opts: EncodeOptions)
     extends Iterator[EncodedChunk] {
 
   private val fsstHeaders = scala.collection.mutable.HashMap.empty[(Int, String), Array[Byte]]
-  protected val open = scala.collection.mutable.HashMap.empty[(Int, String), GroupBuffer]
+  private val open = scala.collection.mutable.HashMap.empty[(Int, String), GroupBuffer]
   private val seqInBucket = scala.collection.mutable.HashMap.empty[Int, Int]
   private var drain: Iterator[(Int, String)] = _
   private var ready: EncodedChunk = _
 
-  /** Pull ONE input unit (row or block) into `open`; return the touched key,
-    * or null when the input is exhausted. A unit may add many rows — chunk
-    * limits are checked after each unit, so a chunk may overshoot the limit
-    * by at most one block (bounded by TokenBlocks' flush threshold).
+  /** Pull ONE block into `open`; return the touched key, or null when the
+    * input is exhausted. Chunk limits are checked after each block, so a
+    * chunk may overshoot the limit by at most one block (bounded by
+    * TokenBlocks' flush threshold).
     */
-  protected def ingestNext(): (Int, String)
+  private def ingestNext(): (Int, String) = {
+    if (!it.hasNext) return null
+    val (bucket, block) = it.next()
+    val rd = new graft.core.ByteReader(block, 0, block.length)
+    val srcLen = rd.readVarUInt()
+    val source = new String(block, rd.pos, srcLen, java.nio.charset.StandardCharsets.UTF_8)
+    rd.pos += srcLen
+    val nRows = TokenBlocks.readFixed32(block, rd)
+    val key = (bucket, source)
+    val g = open.getOrElseUpdate(key, new GroupBuffer)
+    var i = 0
+    while (i < nRows) {
+      val idLen = rd.readVarUInt()
+      val idFrom = rd.pos
+      rd.pos += idLen
+      g.addPacked(rd, rd.readVarUInt(), block, idFrom, idLen)
+      i += 1
+    }
+    key
+  }
 
   private def emit(key: (Int, String), g: GroupBuffer): EncodedChunk = {
     val bucket = key._1
     val seq = seqInBucket.getOrElse(bucket, 0)
     seqInBucket(bucket) = seq + 1
-    val identity = !opts.sortRowsInChunk
-    val order = if (identity) g.identityOrder() else g.sortedOrder()
-    // rows go to the codecs as a slab VIEW in emit order — no per-row
-    // Array[Int] copies (8 B/token of pure memory traffic at 100 TB scale);
-    // doc ids travel as the already-packed byte slab (no per-row Strings)
+    // rows go to the codecs as a slab VIEW — no per-row Array[Int] copies
+    // (8 B/token of pure memory traffic at 100 TB scale); doc ids travel as
+    // the already-packed byte slab (no per-row Strings)
     val chunk = ChunkOps.buildPacked(
       (opts.jobTag << 40) | (bucket.toLong << 24) | seq.toLong, bucket,
-      g.packedIds(order, identity),
-      if (order.length > 0) g.docId(order(0)) else "",
-      key._2, g.view(order),
-      opts.forceCodec, fsstHeaders, g.buildStats())
+      g.packedIds, g.firstDocId,
+      key._2, g.view, opts.forceCodec, fsstHeaders, g.buildStats())
     g.reset()
     chunk
   }
@@ -350,18 +320,6 @@ private abstract class ChunkIteratorBase(opts: EncodeOptions)
   }
 }
 
-/** Row-at-a-time ingestion (the A/B row-shuffle path and tests). */
-private final class ChunkIterator(it: Iterator[(Int, TokenRow)], opts: EncodeOptions)
-    extends ChunkIteratorBase(opts) {
-  protected def ingestNext(): (Int, String) = {
-    if (!it.hasNext) return null
-    val (bucket, row) = it.next()
-    val key = (bucket, row.source)
-    open.getOrElseUpdate(key, new GroupBuffer).add(row.doc_id, row.tokens)
-    key
-  }
-}
-
 /** Deterministic bucket→partition assignment: round-robin modulo. Buckets
   * are near-equal-sized by construction (salted hash), so modulo balances
   * reduce tasks exactly; equality by numPartitions so co-partitioned RDDs
@@ -380,37 +338,8 @@ private[encode] final class BucketPartitioner(n: Int) extends org.apache.spark.P
   override def hashCode: Int = n
 }
 
-/** Block ingestion: (bucket, packedBlock) pairs from the map-side combine;
-  * one block = many rows of one (bucket, source) group, varint-decoded
-  * straight into the group's primitive token array.
-  */
-private final class BlockChunkIterator(
-    it: Iterator[(Int, Array[Byte])], opts: EncodeOptions)
-    extends ChunkIteratorBase(opts) {
-  protected def ingestNext(): (Int, String) = {
-    if (!it.hasNext) return null
-    val (bucket, block) = it.next()
-    val rd = new graft.core.ByteReader(block, 0, block.length)
-    val srcLen = rd.readVarUInt()
-    val source = new String(block, rd.pos, srcLen, java.nio.charset.StandardCharsets.UTF_8)
-    rd.pos += srcLen
-    val nRows = TokenBlocks.readFixed32(block, rd)
-    val key = (bucket, source)
-    val g = open.getOrElseUpdate(key, new GroupBuffer)
-    var i = 0
-    while (i < nRows) {
-      val idLen = rd.readVarUInt()
-      val idFrom = rd.pos
-      rd.pos += idLen
-      g.addPacked(rd, rd.readVarUInt(), block, idFrom, idLen)
-      i += 1
-    }
-    key
-  }
-}
-
 /** Compact open-chunk accumulator: tokens in one growing primitive array.
-  * Chunk statistics accrue during add() (fused pass — all stats are
+  * Chunk statistics accrue during addPacked() (fused pass — all stats are
   * row-internal or order-independent, see ChunkStats.Builder).
   */
 private final class GroupBuffer {
@@ -426,9 +355,8 @@ private final class GroupBuffer {
   // (varUInt(len) + UTF-8 bytes per row): ingest copies bytes straight
   // from the shuffle block and emit copies the slab straight into the
   // chunk — no per-row String (2 allocations + 2 transcodes per row in
-  // earlier rounds). idOffs(i) = offset of row i's record in the slab.
+  // earlier rounds).
   private var idSlab = new graft.core.ByteWriter(4096)
-  private var idOffs = new Array[Int](256)
   private val statsB = new graft.core.ChunkStats.Builder
 
   private def ensure(n: Int): Unit = {
@@ -440,22 +368,7 @@ private final class GroupBuffer {
     if (nRows == starts.length) {
       starts = java.util.Arrays.copyOf(starts, nRows << 1)
       lens = java.util.Arrays.copyOf(lens, nRows << 1)
-      idOffs = java.util.Arrays.copyOf(idOffs, nRows << 1)
     }
-  }
-
-  def add(docId: String, toks: Array[Int]): Unit = {
-    ensure(toks.length)
-    System.arraycopy(toks, 0, big, len, toks.length)
-    starts(nRows) = len
-    lens(nRows) = toks.length
-    idOffs(nRows) = idSlab.size
-    val b = docId.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    idSlab.writeVarUInt(b.length)
-    idSlab.writeBytes(b, 0, b.length)
-    nRows += 1
-    statsB.addRowRange(big, len, toks.length)
-    len += toks.length
   }
 
   /** One row decoded from a TokenBlocks cursor straight into the primitive
@@ -470,7 +383,6 @@ private final class GroupBuffer {
     while (p < end) { big(p) = rd.readZigZag(); p += 1 }
     starts(nRows) = len
     lens(nRows) = n
-    idOffs(nRows) = idSlab.size
     idSlab.writeVarUInt(idLen)
     idSlab.writeBytes(src, idFrom, idLen)
     nRows += 1
@@ -483,102 +395,29 @@ private final class GroupBuffer {
   def size: Int = nRows
   def tokenCount: Long = len.toLong
 
-  def docId(i: Int): String = {
-    val raw = idSlab.ensureRaw(0)
-    val r = new graft.core.ByteReader(raw, idOffs(i), idSlab.size)
-    val l = r.readVarUInt()
-    new String(raw, r.pos, l, java.nio.charset.StandardCharsets.UTF_8)
-  }
-
-  /** PackedIds payload for rows in `order`. Identity order = one slab copy;
-    * a permutation repacks per row (bytes only, still no Strings).
-    */
-  def packedIds(order: Array[Int], identity: Boolean): Array[Byte] = {
-    if (identity) return idSlab.toBytes
-    val raw = idSlab.ensureRaw(0)
-    val w = new graft.core.ByteWriter(idSlab.size + 8)
-    var i = 0
-    while (i < order.length) {
-      val off = idOffs(order(i))
-      val r = new graft.core.ByteReader(raw, off, idSlab.size)
+  /** The first row's doc id ("" when empty). */
+  def firstDocId: String =
+    if (nRows == 0) ""
+    else {
+      val raw = idSlab.ensureRaw(0)
+      val r = new graft.core.ByteReader(raw, 0, idSlab.size)
       val l = r.readVarUInt()
-      w.writeBytes(raw, off, (r.pos - off) + l)
-      i += 1
+      new String(raw, r.pos, l, java.nio.charset.StandardCharsets.UTF_8)
     }
-    w.toBytes
-  }
 
-  /** Unsigned byte-lexicographic doc_id compare (sorted-mode tie-break;
-    * equals UTF-16 String order for ASCII ids, code-point order otherwise).
-    */
-  def idCompare(a: Int, b: Int): Int = {
-    val raw = idSlab.ensureRaw(0)
-    val ra = new graft.core.ByteReader(raw, idOffs(a), idSlab.size)
-    val rb = new graft.core.ByteReader(raw, idOffs(b), idSlab.size)
-    val la = ra.readVarUInt()
-    val lb = rb.readVarUInt()
-    var i = 0
-    val lim = math.min(la, lb)
-    while (i < lim) {
-      val c = (raw(ra.pos + i) & 0xff) - (raw(rb.pos + i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    la - lb
-  }
+  /** The rows' doc ids in PackedIds wire format: one slab copy. */
+  def packedIds: Array[Byte] = idSlab.toBytes
 
-  /** Slab view of the rows permuted to `order` — the codecs encode straight
+  /** Slab view of the rows in arrival order — the codecs encode straight
     * out of `big`; only the two offset tables are copied.
     */
-  def view(order: Array[Int]): graft.core.TokenRows = {
-    val s2 = new Array[Int](order.length)
-    val l2 = new Array[Int](order.length)
-    var i = 0
-    while (i < order.length) {
-      s2(i) = starts(order(i))
-      l2(i) = lens(order(i))
-      i += 1
-    }
-    graft.core.TokenRows.ofSlab(big, s2, l2, order.length)
-  }
+  def view: graft.core.TokenRows = graft.core.TokenRows.ofSlab(
+    big, java.util.Arrays.copyOf(starts, nRows), java.util.Arrays.copyOf(lens, nRows), nRows)
 
   def reset(): Unit = {
     len = 0
     nRows = 0
     idSlab = new graft.core.ByteWriter(4096)
     statsB.reset()
-  }
-
-  /** Arrival order — the default emit order (see EncodeOptions.sortRowsInChunk). */
-  def identityOrder(): Array[Int] = Array.range(0, nRows)
-
-  /** Rows ordered by (n_tok, doc_id) within the chunk. Unboxed two-phase
-    * sort: (len, idx) packed into longs for the primary Arrays.sort, then
-    * equal-length runs tie-broken by doc_id.
-    */
-  def sortedOrder(): Array[Int] = {
-    val n = nRows
-    val keys = new Array[Long](n)
-    var i = 0
-    while (i < n) { keys(i) = (lens(i).toLong << 32) | i.toLong; i += 1 }
-    java.util.Arrays.sort(keys)
-    val idx = new Array[Int](n)
-    i = 0
-    while (i < n) { idx(i) = keys(i).toInt; i += 1 }
-    // tie-break equal-len runs by doc_id (insertion order is already stable
-    // from the packed idx bits; the String compare only runs within runs)
-    var lo = 0
-    while (lo < n) {
-      var hi = lo + 1
-      val l = lens(idx(lo))
-      while (hi < n && lens(idx(hi)) == l) hi += 1
-      if (hi - lo > 1) {
-        val slice = java.util.Arrays.copyOfRange(idx, lo, hi)
-          .sortWith((a, b) => idCompare(a, b) < 0)
-        System.arraycopy(slice, 0, idx, lo, slice.length)
-      }
-      lo = hi
-    }
-    idx
   }
 }

@@ -101,16 +101,39 @@ object PackedIds {
     w.toBytes
   }
   def unpackAll(packed: Array[Byte], rowCount: Int): Array[String] = {
-    val r = new graft.core.ByteReader(packed, 0, packed.length)
-    val out = new Array[String](rowCount)
-    var i = 0
-    while (i < rowCount) {
-      val len = r.readVarUInt()
-      out(i) = new String(packed, r.pos, len, java.nio.charset.StandardCharsets.UTF_8)
-      r.pos += len
-      i += 1
+    val ids = new Cursor(packed)
+    Array.fill(rowCount)(ids.next().toString)
+  }
+
+  /** Sequential reader over a packed id slab: each id is a zero-copy
+    * UTF8String view into the slab (callers that keep an id past the slab's
+    * lifetime copy it, as Spark's output projections do).
+    */
+  final class Cursor(slab: Array[Byte]) {
+    private var pos = 0
+
+    private def readLen(): Int = {
+      var len = 0
+      var shift = 0
+      var b = 0
+      do {
+        b = slab(pos) & 0xff; pos += 1
+        len |= (b & 0x7f) << shift; shift += 7
+      } while ((b & 0x80) != 0)
+      len
     }
-    out
+
+    def next(): org.apache.spark.unsafe.types.UTF8String = {
+      val len = readLen()
+      val id = org.apache.spark.unsafe.types.UTF8String.fromBytes(slab, pos, len)
+      pos += len
+      id
+    }
+
+    def skip(): Unit = {
+      val len = readLen()
+      pos += len
+    }
   }
 }
 

@@ -1,53 +1,46 @@
 package graft.query
 
 import graft.core._
-import graft.format.Offsets
+import graft.format.{Offsets, PackedIds}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext,
+  CodegenFallback, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Per-thread bounded cache keyed by header bytes (hash + content check —
-  * a hash collision must never return another header's artifact). One cache
-  * per artifact kind so per-row expression eval amortizes header parsing and
-  * DFA construction across a chunk's rows (the reference amortizes per
-  * 64Ki-row block: /root/reference/src/algos/Comet.hpp:26-38).
+/** Shared shape of the row decoders (enc, header, codec) → array<int>. Each
+  * stays inside WholeStageCodegen (the per-row path a user hits when
+  * projecting `tokens` from the encoded view): one virtual call per row, no
+  * fallback-iterator boundary splitting the stage.
   */
-private[query] final class HeaderCache[V](build: Array[Byte] => V, max: Int = 32) {
-  private val tl = new ThreadLocal[java.util.LinkedHashMap[Int, (Array[Byte], V)]] {
-    override def initialValue() =
-      new java.util.LinkedHashMap[Int, (Array[Byte], V)](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[Int, (Array[Byte], V)]) = size > max
-      }
-  }
-  def get(header: Array[Byte]): V = {
-    val key = java.util.Arrays.hashCode(header)
-    val c = tl.get()
-    val hit = c.get(key)
-    if (hit != null && java.util.Arrays.equals(hit._1, header)) hit._2
-    else {
-      val v = build(header)
-      c.put(key, (header, v))
-      v
-    }
-  }
-}
+abstract class RowDecodeExpression extends TernaryExpression {
+  def enc: Expression
+  def header: Expression
+  def codecName: Expression
+  override def first: Expression = enc
+  override def second: Expression = header
+  override def third: Expression = codecName
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
 
-private[query] object EvalCaches {
-  private val symtabs = new HeaderCache[SymTab](SymTab.fromBytes)
-  private val dicts = new HeaderCache[Array[Int]](DictCodec.readDict)
-  private val decodersByCodec =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[RowDecoder]]
+  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int]
 
-  def symtab(header: Array[Byte]): SymTab = symtabs.get(header)
-  /** Sorted dictionary values from a dict-codec header. */
-  def dict(header: Array[Byte]): Array[Int] = dicts.get(header)
-  def decoder(codec: String, header: Array[Byte]): RowDecoder =
-    decodersByCodec.getOrElseUpdate(codec,
-      new HeaderCache[RowDecoder](Codecs.byName(codec).decoder)).get(header)
+  // UnsafeArrayData.fromPrimitiveArray = one memcpy; GenericArrayData(int[])
+  // boxes every element AND forces the row writer into an element loop
+  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(decode(e, h, c.toString))
+
+  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
+    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
+      c.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("rowDecode", this, classOf[RowDecodeExpression].getName)
+    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
+  }
 }
 
 /** decode_row(enc, header, codec) → array<int>: decodes one encoded row.
@@ -55,34 +48,10 @@ private[query] object EvalCaches {
   * (SURVEY.md §4 O2).
   */
 case class DecodeRow(enc: Expression, header: Expression, codecName: Expression)
-    extends TernaryExpression {
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
+    extends RowDecodeExpression {
   override def prettyName: String = "decode_row"
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val dec = EvalCaches.decoder(c.toString, h)
-    // UnsafeArrayData.fromPrimitiveArray = one memcpy; GenericArrayData(int[])
-    // boxes every element AND forces the row writer into an element loop
-    UnsafeArrayData.fromPrimitiveArray(dec.decode(e, 0, e.length))
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  // stays inside WholeStageCodegen (the per-row path a user hits when
-  // projecting `tokens` from the encoded view): one virtual call per row,
-  // no fallback-iterator boundary splitting the stage
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeRow", this, classOf[DecodeRow].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
+  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
+    EvalCaches.decoder(codec, h).decode(e, 0, e.length)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
@@ -93,35 +62,12 @@ case class DecodeRow(enc: Expression, header: Expression, codecName: Expression)
   * row instead of the whole row — the read-side dual of encode.Truncate.
   */
 case class DecodeHead(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends TernaryExpression {
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
+    extends RowDecodeExpression {
   override def prettyName: String = "decode_head"
-
   // head decoder per (codec, header): header parsed once per chunk
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[HeadRowDecoder]]
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[HeadRowDecoder](hh => HeadDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeHead(e, 0, e.length, k))
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeHead", this, classOf[DecodeHead].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
+  @transient private lazy val decoders = new CodecHeaderCache(HeadDecode.decoder)
+  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
+    decoders.get(codec, h).decodeHead(e, 0, e.length, k)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
@@ -134,34 +80,11 @@ case class DecodeHead(enc: Expression, header: Expression, codecName: Expression
   * stream at index n−k.
   */
 case class DecodeTail(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends TernaryExpression {
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
+    extends RowDecodeExpression {
   override def prettyName: String = "decode_tail"
-
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[TailRowDecoder]]
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[TailRowDecoder](hh => TailDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeTail(e, 0, e.length, k))
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeTail", this, classOf[DecodeTail].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
+  @transient private lazy val decoders = new CodecHeaderCache(TailDecode.decoder)
+  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
+    decoders.get(codec, h).decodeTail(e, 0, e.length, k)
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
     copy(enc = f, header = s, codecName = t)
 }
@@ -174,145 +97,65 @@ case class DecodeTail(enc: Expression, header: Expression, codecName: Expression
   * the encoded view decode O(skip + k) per row, never the whole row.
   */
 case class DecodeSlice(enc: Expression, header: Expression, codecName: Expression,
-                       s: Int, k: Int) extends TernaryExpression {
+                       s: Int, k: Int) extends RowDecodeExpression {
   require(s != 0, "slice start must be nonzero (builtin Slice semantics)")
   require(k >= 0, "slice length must be non-negative")
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = enc.nullable || header.nullable || codecName.nullable
   override def prettyName: String = "decode_slice"
-
-  @transient private lazy val decoders =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[SliceRowDecoder]]
-
-  def decodeOne(e: Array[Byte], h: Array[Byte], c: UTF8String): ArrayData = {
-    val codec = c.toString
-    val dec = decoders.getOrElseUpdate(codec,
-      new HeaderCache[SliceRowDecoder](hh => SliceDecode.decoder(codec, hh))).get(h)
-    UnsafeArrayData.fromPrimitiveArray(dec.decodeSlice(e, 0, e.length, s, k))
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    decodeOne(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]],
-      c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("decodeSlice", this, classOf[DecodeSlice].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.decodeOne($e, $h, $c);")
-  }
-
+  @transient private lazy val decoders = new CodecHeaderCache(SliceDecode.decoder)
+  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
+    decoders.get(codec, h).decodeSlice(e, 0, e.length, s, k)
   override protected def withNewChildrenInternal(f: Expression, s2: Expression, t: Expression) =
     copy(enc = f, header = s2, codecName = t)
 }
 
-/** Token-domain pattern predicate on a decoded/raw array<int> column. The
-  * logical marker the pushdown rule looks for; also the fallback physical
-  * path (decode-then-match, the reference's StdEngine baseline,
+/** A token predicate on a decoded/raw array<int> column — the logical
+  * marker the pushdown rule looks for (`tokens_match_<mode>`,
+  * `any_token_in_range`, `any_token_in_set`), and the decode-then-test
+  * fallback path (the reference's StdEngine baseline,
   * /root/reference/src/algos/StdFind.hpp:25-46).
   */
-case class TokenPatternMatch(child: Expression, mode: String, parts: Seq[Seq[Int]])
-    extends UnaryExpression {
-  private val partsArr: Array[Array[Int]] =
-    PatternMode.normalize(mode, parts.map(_.toArray).toArray)
+case class TokensMatch(child: Expression, pred: TokenPredicate) extends UnaryExpression {
   override def dataType: DataType = BooleanType
-  override def prettyName: String = s"tokens_match_$mode"
+  override def prettyName: String = pred.decodedName
 
-  def matches(arr: ArrayData): Boolean =
-    TokenMatch.eval(mode, partsArr, arr.toIntArray())
+  def matches(arr: ArrayData): Boolean = pred.evalDecoded(arr.toIntArray())
 
-  override protected def nullSafeEval(v: Any): Any =
-    matches(v.asInstanceOf[ArrayData])
+  override protected def nullSafeEval(v: Any): Any = matches(v.asInstanceOf[ArrayData])
 
   // stays inside WholeStageCodegen: one static-shaped call per row
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("tokenPatternMatch", this, classOf[TokenPatternMatch].getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("tokensMatch", this, classOf[TokensMatch].getName)
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.matches($c);")
   }
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** Pattern predicate evaluated directly on compressed row bytes — the
+/** A token predicate evaluated directly on one compressed row — the
   * engine's raison d'être (the reference's compressed-domain LIKE,
-  * /root/reference/src/algos/Comet.hpp:63-96). FSST chunks run the
-  * lookup-KMP machinery without decoding; other codecs decode-then-match
-  * (they're positional codes, not substitution codes).
+  * reference `src/algos/Comet.hpp:63-96`). The predicate's row test is
+  * prepared once per (codec, header) and cached per thread, so per-row eval
+  * is one cache probe plus the codec's own kernel.
   */
-case class CompressedPatternMatch(enc: Expression, header: Expression, codecName: Expression,
-                                  mode: String, parts: Seq[Seq[Int]])
-    extends TernaryExpression {
-  private val partsArr: Array[Array[Int]] =
-    PatternMode.normalize(mode, parts.map(_.toArray).toArray)
-  private val patternId = System.identityHashCode(this)
-  // pattern as maximal runs (RLE-domain matching) — pattern constants
-  @transient private lazy val patRuns: (Array[Array[Int]], Array[Array[Int]], Array[Int]) = {
-    val rs = partsArr.map(RleMatch.patternRuns)
-    (rs.map(_._1), rs.map(_._2), partsArr.map(_.length))
-  }
-  // token→index translation + index-domain packed matcher memoized per dict
-  // header (evaluated per row); None = a pattern token is outside the
-  // dictionary, an exact whole-chunk gate
-  @transient private lazy val dictPrepared =
-    new HeaderCache[Option[PackedAnchor.Prepared]](h =>
-      DictMatch.translate(EvalCaches.dict(h), partsArr)
-        .map(idxParts => PackedAnchor.prepareDict(h, mode, idxParts)))
-  // equals-mode pattern image per (codec, header) — canonical-encoding E5
-  @transient private lazy val equalsImages =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[Option[Array[Byte]]]]
-  // FoR/bitpack packed-domain matcher per (codec, header) — phase images and
-  // range guards are built once per chunk header, not per row
-  @transient private lazy val packedPrepared =
-    scala.collection.concurrent.TrieMap.empty[String, HeaderCache[PackedAnchor.Prepared]]
+case class CompressedMatch(enc: Expression, header: Expression, codecName: Expression,
+                           pred: TokenPredicate) extends TernaryExpression {
+  @transient private lazy val prepared = new CodecHeaderCache(pred.prepare)
   override def first: Expression = enc
   override def second: Expression = header
   override def third: Expression = codecName
   override def dataType: DataType = BooleanType
-  override def prettyName: String = s"compressed_match_$mode"
+  override def prettyName: String = pred.compressedName
 
   def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    if (codec == FsstTokenCodec.name) {
-      val st = EvalCaches.symtab(headerBytes)
-      val pm = PatternMachine.forTable(st, patternId, partsArr)
-      FsstMatch.eval(mode, pm, bytes, 0, bytes.length)
-    } else if (mode == PatternMode.Equals) {
-      // canonical-encoding equality (E5): one byte compare per row
-      equalsImages.getOrElseUpdate(codec,
-        new HeaderCache[Option[Array[Byte]]](
-          h => PackedEquals.patternImage(codec, h, partsArr(0))))
-        .get(headerBytes) match {
-        case None => false
-        case Some(img) => PackedEquals.rowEquals(bytes, 0, bytes.length, img)
-      }
-    } else if (codec == DictCodec.name) {
-      dictPrepared.get(headerBytes) match {
-        case None => false // a pattern token is outside this chunk's dictionary
-        case Some(prep) => prep.evalRow(bytes, 0, bytes.length)
-      }
-    } else if (codec == RleCodec.name) {
-      val (pvs, pcs, lens) = patRuns
-      RleMatch.eval(mode, bytes, 0, bytes.length, pvs, pcs, lens)
-    } else if (PackedAnchor.supports(codec, mode)) {
-      packedPrepared.getOrElseUpdate(codec,
-        new HeaderCache[PackedAnchor.Prepared](
-          h => PackedAnchor.prepare(codec, h, mode, partsArr)))
-        .get(headerBytes).evalRow(bytes, 0, bytes.length)
-    } else {
-      val dec = EvalCaches.decoder(codec, headerBytes)
-      TokenMatch.eval(mode, partsArr, dec.decode(bytes, 0, bytes.length))
-    }
+    val test = prepared.get(codecU.toString, headerBytes)
+    test != null && test(bytes, 0, bytes.length)
   }
 
   override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
     matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedPatternMatch", this, classOf[CompressedPatternMatch].getName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("compressedMatch", this, classOf[CompressedMatch].getName)
     nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
   }
 
@@ -320,173 +163,75 @@ case class CompressedPatternMatch(enc: Expression, header: Expression, codecName
     copy(enc = f, header = s, codecName = t)
 }
 
-/** Token-domain range predicate on a decoded/raw array<int> column:
-  * any_token_in_range(tokens, lo, hi). The logical marker the pushdown rule
-  * rewrites into [[CompressedRangeMatch]]; also the decode-then-test
-  * fallback path.
+/** An expression evaluated once per CHUNK row: every child is evaluated and
+  * the values go, boxed in one array, to [[evalChunk]]; a null child yields
+  * an empty array. Codegen'd (one call per chunk) so the enclosing scan +
+  * Generate stay inside a single WholeStageCodegen stage.
   */
-case class TokenRangeMatch(child: Expression, lo: Int, hi: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "any_token_in_range"
-
-  def matches(arr: ArrayData): Boolean =
-    RangeMatch.evalDecoded(arr.toIntArray(), lo, hi)
-
-  override protected def nullSafeEval(v: Any): Any =
-    matches(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("tokenRangeMatch", this, classOf[TokenRangeMatch].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.matches($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** Range predicate evaluated directly on compressed row bytes, per codec —
-  * see [[graft.core.RangeMatch]] for the kernel inventory. Per-header
-  * artifacts (fsst code table, dict index interval) are cached so per-row
-  * eval pays one table load per code byte / one packed compare per value.
-  */
-case class CompressedRangeMatch(enc: Expression, header: Expression, codecName: Expression,
-                                lo: Int, hi: Int)
-    extends TernaryExpression {
-  @transient private lazy val fsstTables =
-    new HeaderCache[Array[Boolean]](h => RangeMatch.fsstCodeTable(EvalCaches.symtab(h), lo, hi))
-  // (iLo, iHi, packed width) of the dict's qualifying index interval
-  @transient private lazy val dictRanges =
-    new HeaderCache[(Int, Int, Int)]({ h =>
-      val dict = EvalCaches.dict(h)
-      val (iLo, iHi) = RangeMatch.dictIndexRange(dict, lo, hi)
-      (iLo, iHi, BitPack.bitsFor(math.max(dict.length - 1, 0)))
-    })
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "compressed_range_match"
-
-  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    codec match {
-      case FsstTokenCodec.name =>
-        RangeMatch.evalFsst(fsstTables.get(headerBytes), bytes, 0, bytes.length, lo, hi)
-      case DictCodec.name =>
-        val (iLo, iHi, width) = dictRanges.get(headerBytes)
-        iLo <= iHi && RangeMatch.evalDict(bytes, 0, bytes.length, width, iLo, iHi)
-      case RleCodec.name => RangeMatch.evalRle(bytes, 0, bytes.length, lo, hi)
-      case BitPackCodec.name =>
-        RangeMatch.evalBitpack(bytes, 0, bytes.length, headerBytes(0) & 0xff, lo, hi)
-      case ForCodec.name =>
-        RangeMatch.evalFor(bytes, 0, bytes.length, headerBytes(0) & 0xff, lo, hi)
-      case RawCodec.name => RangeMatch.evalRaw(bytes, 0, bytes.length, lo, hi)
-      case other =>
-        RangeMatch.evalDecoded(
-          EvalCaches.decoder(other, headerBytes).decode(bytes, 0, bytes.length), lo, hi)
-    }
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedRangeMatch", this, classOf[CompressedRangeMatch].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
-}
-
-/** Chunk-granularity range scan: zone-map gate on the chunk's min/max token
-  * (the token analog of parquet min/max pruning — a disjoint chunk is
-  * skipped without touching `data`), then the per-codec compressed-domain
-  * kernels over all rows, returning matching doc_ids.
-  */
-case class ChunkRangeDocIds(children: Seq[Expression], lo: Int, hi: Int)
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, min_tok, max_tok
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+trait PerChunkExpression extends Expression {
   override def nullable: Boolean = false
-  override def prettyName: String = "chunk_range"
 
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkRange", this, classOf[ChunkRangeDocIds].getName)
+  def evalChunk(vals: Array[Any]): ArrayData
+
+  def emptyResult(): ArrayData = new GenericArrayData(Array.empty[Any])
+
+  override def eval(input: InternalRow): Any = {
+    val vals = children.map(_.eval(input)).toArray[Any]
+    if (vals.contains(null)) emptyResult() else evalChunk(vals)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("perChunk", this, classOf[PerChunkExpression].getName)
     val evals = children.map(_.genCode(ctx))
     val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(int) ${evals(6).value}", s"(int) ${evals(7).value}").mkString(", ")
+    val boxed = children.zip(evals).map { case (c, e) =>
+      if (CodeGenerator.isPrimitiveType(c.dataType))
+        s"${CodeGenerator.boxedType(c.dataType)}.valueOf(${e.value})"
+      else e.value.toString
+    }
     val code =
       code"""
         ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
+        ${classOf[ArrayData].getName} ${ev.value} = null;
         if ($anyNull) {
           ${ev.value} = $ref.emptyResult();
         } else {
-          ${ev.value} = $ref.matchChunk($args);
+          ${ev.value} = $ref.evalChunk(new Object[] {${boxed.mkString(", ")}});
         }
       """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+    ev.copy(code = code, isNull = FalseLiteral)
   }
+}
 
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
+/** Chunk-granularity scan: evaluates a token predicate over ALL rows of a
+  * chunk in one call and returns the matching doc_ids — the direct analog
+  * of Engine::Scan filling a row-id vector
+  * (reference `src/BenchmarkDriver.hpp:58-59`). The predicate's stats
+  * gate runs first (zone map, bloom, FSST set cover: a gated chunk never
+  * touches `data`), then its row test is prepared once for the chunk (null
+  * = exact whole-chunk gate), then one loop walks rows and the id slab.
+  */
+case class ChunkDocIds(children: Seq[Expression], pred: TokenPredicate)
+    extends PerChunkExpression {
+  // children: doc_ids, data, offsets, row_count, symtab, codec,
+  // then the predicate's statsFields
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = pred.chunkName
 
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Int], vals(7).asInstanceOf[Int])
-  }
-
-  def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 minTok: Int, maxTok: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (!RangeMatch.chunkOverlaps(minTok, maxTok, lo, hi))
-      return new GenericArrayData(Array.empty[Any]) // zone-map prune
-    val codec = codecU.toString
-    val offs = Offsets.unpack(offBytes, rowCount)
+  def evalChunk(v: Array[Any]): ArrayData = {
+    val header = v(4).asInstanceOf[Array[Byte]]
+    val codec = v(5).toString
+    if (!pred.gate(codec, header, v.drop(6))) return emptyResult()
+    val test = pred.prepare(codec, header)
+    if (test == null) return emptyResult()
+    val data = v(1).asInstanceOf[Array[Byte]]
+    val rowCount = v(3).asInstanceOf[Int]
+    val offs = Offsets.unpack(v(2).asInstanceOf[Array[Byte]], rowCount)
+    val ids = new PackedIds.Cursor(v(0).asInstanceOf[Array[Byte]])
     val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
-    }
-    val rowEval: (Int, Int) => Boolean = codec match {
-      case FsstTokenCodec.name =>
-        val table = RangeMatch.fsstCodeTable(EvalCaches.symtab(header), lo, hi)
-        (f, t) => RangeMatch.evalFsst(table, data, f, t, lo, hi)
-      case DictCodec.name =>
-        val dict = EvalCaches.dict(header)
-        val (iLo, iHi) = RangeMatch.dictIndexRange(dict, lo, hi)
-        if (iLo > iHi) return new GenericArrayData(Array.empty[Any]) // exact gate
-        val width = BitPack.bitsFor(math.max(dict.length - 1, 0))
-        (f, t) => RangeMatch.evalDict(data, f, t, width, iLo, iHi)
-      case RleCodec.name => (f, t) => RangeMatch.evalRle(data, f, t, lo, hi)
-      case BitPackCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => RangeMatch.evalBitpack(data, f, t, width, lo, hi)
-      case ForCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => RangeMatch.evalFor(data, f, t, width, lo, hi)
-      case RawCodec.name => (f, t) => RangeMatch.evalRaw(data, f, t, lo, hi)
-      case other =>
-        val dec = EvalCaches.decoder(other, header)
-        (f, t) => RangeMatch.evalDecoded(dec.decode(data, f, t), lo, hi)
-    }
     var i = 0
     while (i < rowCount) {
-      nextId(rowEval(offs(i), offs(i + 1)))
+      if (test(data, offs(i), offs(i + 1))) out += ids.next() else ids.skip()
       i += 1
     }
     new GenericArrayData(out.toArray)
@@ -523,8 +268,7 @@ case class RowTokenCount(enc: Expression) extends UnaryExpression {
   override protected def nullSafeEval(v: Any): Any =
     count(v.asInstanceOf[Array[Byte]])
 
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("rowTokenCount", this, classOf[RowTokenCount].getName)
     nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.count($c);")
   }
@@ -532,440 +276,303 @@ case class RowTokenCount(enc: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression) = copy(enc = c)
 }
 
-/** Token-domain set-membership predicate (any_token_in_set) on a decoded/raw
-  * array<int> column — the blocklist/allowlist filter; logical marker for
-  * the pushdown rewrite into [[CompressedSetMatch]].
+/** One chunk's evaluated columns, in the generators' child order: doc_ids,
+  * data, offsets, row_count, then symtab, codec and any stats columns.
   */
-case class TokenSetMatch(child: Expression, tokens: Seq[Int])
-    extends UnaryExpression {
-  private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "any_token_in_set"
-
-  def matches(arr: ArrayData): Boolean =
-    SetMatch.evalDecoded(arr.toIntArray(), sorted)
-
-  override protected def nullSafeEval(v: Any): Any =
-    matches(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("tokenSetMatch", this, classOf[TokenSetMatch].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.matches($c);")
-  }
-
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+final class ChunkInput(vals: Array[Any]) {
+  def ids: Array[Byte] = vals(0).asInstanceOf[Array[Byte]]
+  val data: Array[Byte] = vals(1).asInstanceOf[Array[Byte]]
+  val rows: Int = vals(3).asInstanceOf[Int]
+  lazy val offs: Array[Int] = Offsets.unpack(vals(2).asInstanceOf[Array[Byte]], rows)
+  def header: Array[Byte] = vals(4).asInstanceOf[Array[Byte]]
+  def codec: String = vals(5).toString
+  def stats: Array[Any] = vals.drop(6)
 }
 
-/** Set-membership predicate on compressed row bytes — see
-  * [[graft.core.SetMatch]] for the per-codec kernels. Header artifacts
-  * (fsst code table, dict index table) cached per chunk header.
+/** One chunk's per-document output: `count(i)` rows for document i (one by
+  * default), the j-th built by `row`.
   */
-case class CompressedSetMatch(enc: Expression, header: Expression, codecName: Expression,
-                              tokens: Seq[Int])
-    extends TernaryExpression {
-  private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  @transient private lazy val fsstTables =
-    new HeaderCache[Array[Boolean]](h => SetMatch.fsstCodeTable(EvalCaches.symtab(h), sorted))
-  @transient private lazy val dictTables =
-    new HeaderCache[Option[(Array[Boolean], Int)]]({ h =>
-      val dict = EvalCaches.dict(h)
-      SetMatch.dictIndexTable(dict, sorted)
-        .map(t => (t, BitPack.bitsFor(math.max(dict.length - 1, 0))))
-    })
-  override def first: Expression = enc
-  override def second: Expression = header
-  override def third: Expression = codecName
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "compressed_set_match"
-
-  def matches(bytes: Array[Byte], headerBytes: Array[Byte], codecU: UTF8String): Boolean = {
-    val codec = codecU.toString
-    codec match {
-      case FsstTokenCodec.name =>
-        SetMatch.evalFsst(fsstTables.get(headerBytes), sorted, bytes, 0, bytes.length)
-      case DictCodec.name =>
-        dictTables.get(headerBytes) match {
-          case None => false
-          case Some((t, width)) => SetMatch.evalDict(bytes, 0, bytes.length, width, t)
-        }
-      case RleCodec.name => SetMatch.evalRle(bytes, 0, bytes.length, sorted)
-      case BitPackCodec.name =>
-        SetMatch.evalBitpack(bytes, 0, bytes.length, headerBytes(0) & 0xff, sorted)
-      case ForCodec.name =>
-        SetMatch.evalFor(bytes, 0, bytes.length, headerBytes(0) & 0xff, sorted)
-      case RawCodec.name => SetMatch.evalRaw(bytes, 0, bytes.length, sorted)
-      case other =>
-        SetMatch.evalDecoded(
-          EvalCaches.decoder(other, headerBytes).decode(bytes, 0, bytes.length), sorted)
-    }
-  }
-
-  override protected def nullSafeEval(e: Any, h: Any, c: Any): Any =
-    matches(e.asInstanceOf[Array[Byte]], h.asInstanceOf[Array[Byte]], c.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("compressedSetMatch", this, classOf[CompressedSetMatch].getName)
-    nullSafeCodeGen(ctx, ev, (e, h, c) => s"${ev.value} = $ref.matches($e, $h, $c);")
-  }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
+abstract class DocRows {
+  def count(i: Int): Int = 1
+  def row(id: UTF8String, i: Int, j: Int): InternalRow
 }
 
-/** Chunk-granularity set scan with BOTH gates: zone map (set disjoint from
-  * the chunk's [min,max] token) and the token bloom (no set element
-  * may-present) — the ANY-semantics dual of the pattern scan's
-  * ALL-tokens-required gate — then the per-codec kernels over all rows.
+/** Base of the lazy per-document generators over a chunk table: evaluates
+  * the chunk's columns once, runs the subclass's chunk kernel (which never
+  * decodes a row into a token array), then walks the packed id slab —
+  * each doc id a zero-copy UTF8String view that GenerateExec's output
+  * projection copies before the next row is requested.
   */
-case class ChunkSetDocIds(children: Seq[Expression], tokens: Seq[Int])
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, min_tok, max_tok, bloom
-  private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "chunk_set"
+abstract class DocRowsGenerator extends Expression with Generator with CodegenFallback {
+  protected def kernel(c: ChunkInput): DocRows
 
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkSet", this, classOf[ChunkSetDocIds].getName)
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(int) ${evals(6).value}", s"(int) ${evals(7).value}",
-      s"(byte[]) ${evals(8).value}").mkString(", ")
-    val code =
-      code"""
-        ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if ($anyNull) {
-          ${ev.value} = $ref.emptyResult();
-        } else {
-          ${ev.value} = $ref.matchChunk($args);
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val c = new ChunkInput(children.map(_.eval(input)).toArray[Any])
+    if (c.rows == 0) return Iterator.empty
+    val per = kernel(c)
+    val ids = new PackedIds.Cursor(c.ids)
+    new Iterator[InternalRow] {
+      private var i = -1
+      private var j = 0
+      private var n = 0
+      private var id: UTF8String = _
+      private def advance(): Unit =
+        while (j >= n && i + 1 < c.rows) {
+          i += 1; j = 0
+          id = ids.next()
+          n = per.count(i)
         }
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Int], vals(7).asInstanceOf[Int],
-      vals(8).asInstanceOf[Array[Byte]])
-  }
-
-  def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 minTok: Int, maxTok: Int, bloom: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (!SetMatch.chunkOverlaps(sorted, minTok, maxTok) ||
-        !SetMatch.chunkMayContainAny(bloom, sorted))
-      return new GenericArrayData(Array.empty[Any])
-    val codec = codecU.toString
-    val offs = Offsets.unpack(offBytes, rowCount)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
+      advance()
+      def hasNext: Boolean = j < n
+      def next(): InternalRow = {
+        val r = per.row(id, i, j)
+        j += 1
+        advance()
+        r
+      }
     }
-    val rowEval: (Int, Int) => Boolean = codec match {
-      case FsstTokenCodec.name =>
-        val table = SetMatch.fsstCodeTable(EvalCaches.symtab(header), sorted)
-        (f, t) => SetMatch.evalFsst(table, sorted, data, f, t)
-      case DictCodec.name =>
-        SetMatch.dictIndexTable(EvalCaches.dict(header), sorted) match {
-          case None => return new GenericArrayData(Array.empty[Any]) // exact gate
-          case Some(table) =>
-            val width = BitPack.bitsFor(math.max(EvalCaches.dict(header).length - 1, 0))
-            (f, t) => SetMatch.evalDict(data, f, t, width, table)
-        }
-      case RleCodec.name => (f, t) => SetMatch.evalRle(data, f, t, sorted)
-      case BitPackCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => SetMatch.evalBitpack(data, f, t, width, sorted)
-      case ForCodec.name =>
-        val width = header(0) & 0xff
-        (f, t) => SetMatch.evalFor(data, f, t, width, sorted)
-      case RawCodec.name => (f, t) => SetMatch.evalRaw(data, f, t, sorted)
-      case other =>
-        val dec = EvalCaches.decoder(other, header)
-        (f, t) => SetMatch.evalDecoded(dec.decode(data, f, t), sorted)
-    }
-    var i = 0
-    while (i < rowCount) {
-      nextId(rowEval(offs(i), offs(i + 1)))
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
   }
-
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(children = cs)
 }
 
-/** Chunk-granularity matcher: evaluates the pattern over ALL rows of a chunk
-  * in one call and returns the matching doc_ids. DFA build is amortized over
-  * the whole chunk and the row loop never materializes decoded rows (FSST) —
-  * the direct analog of Engine::Scan filling a row-id vector
-  * (/root/reference/src/BenchmarkDriver.hpp:58-59). Bloom-gate first: if any
-  * needed token is absent from the chunk's token bloom, the whole chunk is
-  * skipped (chunk-level analog of required-symbol skipping, SURVEY.md §4 O4).
+/** encoded_rows(doc_ids, data, offsets, row_count) — one (doc_id, enc) row
+  * per encoded document straight off the chunk's two packed slabs; `enc` is
+  * the row's byte slice, the only per-row allocation. Replaces the round-4
+  * `arrays_zip(unpack_ids, row_slices) + explode` formulation, which
+  * materialized ALL row slices plus an id array (~2× chunk memory) before
+  * exploding.
   */
-case class ChunkMatchDocIds(children: Seq[Expression], mode: String, parts: Seq[Seq[Int]])
-    extends Expression {
-  // children: doc_ids, data, offsets, row_count, symtab, codec, bloom, escaped_bloom
-  private val partsArr: Array[Array[Int]] =
-    PatternMode.normalize(mode, parts.map(_.toArray).toArray)
-  private val neededTokens: Array[Int] = partsArr.flatten.distinct
-  private val patternId = System.identityHashCode(this)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = s"chunk_match_$mode"
-
-  // One eval per CHUNK row, but keeping it codegen'd keeps the enclosing
-  // scan + Generate inside a single WholeStageCodegen stage.
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkMatch", this, classOf[ChunkMatchDocIds].getName)
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(byte[]) ${evals(2).value}", s"(int) ${evals(3).value}",
-      s"(byte[]) ${evals(4).value}", s"(org.apache.spark.unsafe.types.UTF8String) ${evals(5).value}",
-      s"(byte[]) ${evals(6).value}", s"(byte[]) ${evals(7).value}").mkString(", ")
-    val code =
-      code"""
-        ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if ($anyNull) {
-          ${ev.value} = $ref.emptyResult();
-        } else {
-          ${ev.value} = $ref.matchChunk($args);
-        }
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  def emptyResult(): org.apache.spark.sql.catalyst.util.ArrayData =
-    new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else matchChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Array[Byte]], vals(3).asInstanceOf[Int],
-      vals(4).asInstanceOf[Array[Byte]], vals(5).asInstanceOf[UTF8String],
-      vals(6).asInstanceOf[Array[Byte]], vals(7).asInstanceOf[Array[Byte]])
-  }
-
-  def matchChunk(packedIds: Array[Byte], data: Array[Byte], offBytes: Array[Byte],
-                 rowCount: Int, header: Array[Byte], codecU: UTF8String,
-                 bloom: Array[Byte], escaped: Array[Byte]): org.apache.spark.sql.catalyst.util.ArrayData = {
-    // chunk skip: every pattern token must be (possibly) present
-    var t = 0
-    while (t < neededTokens.length) {
-      if (!ChunkStats.bloomHas(bloom, neededTokens(t))) return new GenericArrayData(Array.empty[Any])
-      t += 1
-    }
-    val codec = codecU.toString
-    val offs = Offsets.unpack(offBytes, rowCount)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val idCursor = new graft.core.ByteReader(packedIds, 0, packedIds.length)
-    @inline def nextId(matched: Boolean): Unit = {
-      val len = idCursor.readVarUInt()
-      if (matched) out += UTF8String.fromBytes(packedIds, idCursor.pos, len)
-      idCursor.pos += len
-    }
-    if (codec == FsstTokenCodec.name) {
-      val st = EvalCaches.symtab(header)
-      val pm = PatternMachine.forTable(st, patternId, partsArr)
-      // Chunk-level skipping gate (F6): spelling-path set cover against this
-      // chunk's escaped-token bloom — Left means the pattern is provably
-      // unspellable here and the whole chunk is skipped without touching
-      // `data`. The former per-row required-byte PRE-SCAN is gone: the
-      // zero-state skip run inside the matchers (CodeDfa.hot0) performs the
-      // same byte-skipping in a single pass fused with the match itself, so
-      // a second pass over the row bytes only added work.
-      if (pm.requiredCodeTable(escaped).isLeft) {
-        return new GenericArrayData(Array.empty[Any]) // provably no match
-      }
-      var i = 0
-      while (i < rowCount) {
-        nextId(FsstMatch.eval(mode, pm, data, offs(i), offs(i + 1)))
-        i += 1
-      }
-    } else if (mode == PatternMode.Equals) {
-      // canonical-encoding equality (E5): encode the pattern once with this
-      // chunk's codec, then one byte compare per row
-      PackedEquals.patternImage(codec, header, partsArr(0)) match {
-        case None => return new GenericArrayData(Array.empty[Any])
-        case Some(img) =>
-          var i = 0
-          while (i < rowCount) {
-            nextId(PackedEquals.rowEquals(data, offs(i), offs(i + 1), img))
-            i += 1
-          }
-      }
-    } else if (codec == DictCodec.name) {
-      // dict-domain matching: translate the pattern to dictionary indices
-      // once (an absent token proves the chunk matchless — an exact gate,
-      // stronger than the bloom); rows then match IN PLACE on the bit-packed
-      // index stream via the phase-image matcher (dict = bitpack at width
-      // bitsFor(card−1), base 0) — neither indices nor token values ever
-      // materialize per row.
-      DictMatch.translate(EvalCaches.dict(header), partsArr) match {
-        case None => return new GenericArrayData(Array.empty[Any])
-        case Some(idxParts) =>
-          val prep = PackedAnchor.prepareDict(header, mode, idxParts)
-          var i = 0
-          while (i < rowCount) {
-            nextId(prep.evalRow(data, offs(i), offs(i + 1)))
-            i += 1
-          }
-      }
-    } else if (codec == RleCodec.name) {
-      // RLE-domain matching: run-granularity comparisons, rows never expand
-      val rs = partsArr.map(RleMatch.patternRuns)
-      val pvs = rs.map(_._1)
-      val pcs = rs.map(_._2)
-      val lens = partsArr.map(_.length)
-      var i = 0
-      while (i < rowCount) {
-        nextId(RleMatch.eval(mode, data, offs(i), offs(i + 1), pvs, pcs, lens))
-        i += 1
-      }
-    } else if (PackedAnchor.supports(codec, mode)) {
-      // FoR/bitpack packed-domain matching: anchored modes unpack-compare
-      // O(m) values against the row's own frame; contains/multi-infix slide
-      // the pattern's bit-phase images over the packed stream — either way
-      // no row ever decodes (PackedAnchor scaladoc). Prepared once per chunk.
-      val prep = PackedAnchor.prepare(codec, header, mode, partsArr)
-      var i = 0
-      while (i < rowCount) {
-        nextId(prep.evalRow(data, offs(i), offs(i + 1)))
-        i += 1
-      }
-    } else {
-      val dec = EvalCaches.decoder(codec, header)
-      var i = 0
-      while (i < rowCount) {
-        nextId(TokenMatch.eval(mode, partsArr, dec.decode(data, offs(i), offs(i + 1))))
-        i += 1
-      }
-    }
-    new GenericArrayData(out.toArray)
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(children = cs)
-}
-
-/** encoded_rows(doc_ids, data, offsets, row_count) — lazy generator behind
-  * the per-document encoded view: emits one (doc_id, enc) row per encoded
-  * document STRAIGHT off the chunk's two packed slabs. The doc id is a
-  * zero-copy UTF8String view over the id slab (GenerateExec's output
-  * UnsafeProjection copies it before the next row is requested) and `enc`
-  * is the row's byte slice — the only per-row allocation. Replaces the
-  * round-4 `arrays_zip(unpack_ids, row_slices) + explode` formulation,
-  * which materialized ALL row slices plus an id array (~2× chunk memory)
-  * as intermediate GenericArrayData before exploding.
-  */
-case class EncodedRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount)
+case class EncodedRowsGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("enc", BinaryType, nullable = false)))
   override def prettyName: String = "encoded_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val enc = java.util.Arrays.copyOfRange(bytes, offs(i), offs(i + 1))
-        i += 1
-        new GenericInternalRow(Array[Any](id, enc))
-      }
-    }
-  }
+  protected def kernel(c: ChunkInput): DocRows = (id, i, _) =>
+    new GenericInternalRow(Array[Any](id,
+      java.util.Arrays.copyOfRange(c.data, c.offs(i), c.offs(i + 1))))
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3))
+    copy(children = cs)
 }
 
-/** row_meta(doc_ids, data, offsets, row_count) — lazy generator emitting one
-  * (doc_id, n_tok) row per encoded document, reading ONLY the packed id slab
-  * and each row's leading varint token count. No decode, no enc-slice copy:
-  * this is the metadata projection that drives planning-style operators
-  * (sequence packing, length stats, sampling manifests) off a compressed
-  * table at file-metadata cost — the chunk's `data` blob is touched for
-  * exactly rowCount varints (≤5 bytes each) at the row offsets.
+/** row_meta(doc_ids, data, offsets, row_count) — one (doc_id, n_tok) row
+  * per encoded document, reading ONLY the id slab and each row's leading
+  * varint token count: the metadata projection that drives planning-style
+  * operators (sequence packing, length stats, sampling manifests) off a
+  * compressed table at file-metadata cost. One reused output row.
   */
-case class RowMetaGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount)
+case class RowMetaGenerator(children: Seq[Expression]) extends DocRowsGenerator {
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("n_tok", IntegerType, nullable = false)))
   override def prettyName: String = "row_meta"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
+  protected def kernel(c: ChunkInput): DocRows = {
+    val nToks = SetCountMatch.rowTokenCounts(c.data, c.offs, c.rows)
     val out = new GenericInternalRow(2)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        out.update(0, UTF8String.fromBytes(ids, p, len))
-        p += len
-        // the row's encoding leads with its varint token count
-        var q = offs(i); var n = 0; shift = 0
-        do {
-          b = bytes(q) & 0xff; q += 1
-          n |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        out.setInt(1, n)
-        i += 1
-        out
-      }
+    (id, i, _) => { out.update(0, id); out.setInt(1, nToks(i)); out }
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** content_hashes(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, h1, h2) row per encoded document, (h1, h2) the 128-bit
+  * compressed-domain content hash of its token sequence (HashMatch: FSST
+  * code-fragment streaming, RLE closed-form run folds, dict/packed table
+  * loads). Downstream groupBy(h1, h2) dedups exactly while shuffling
+  * 16-byte keys instead of token payloads.
+  */
+case class ContentHashesGenerator(children: Seq[Expression]) extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("h1", LongType, nullable = false),
+    StructField("h2", LongType, nullable = false)))
+  override def prettyName: String = "content_hashes"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val (h1, h2) = HashMatch.chunkRowHashes(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, h1(i), h2(i)))
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** minhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, grams, sig, n_tok) row per encoded document with at least
+  * `shingleN` tokens: the k-permutation MinHash signature and the sorted
+  * distinct shingle-hash set, streamed off the codec's wire format through
+  * a rolling window (core/MinHashMatch) — bit-identical to ShingleHashes +
+  * MinHashSig on the decoded array. Shorter rows are dropped, mirroring the
+  * decoded path's `n_tok >= shingleN` filter (their all-sentinel signatures
+  * would band every short row with every other). With collectGrams=false
+  * the grams column is empty — sig-only callers skip the gram allocation.
+  */
+case class MinHashRowsGenerator(children: Seq[Expression], shingleN: Int, numHashes: Int,
+                                seed: Long, collectGrams: Boolean) extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("grams", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
+    StructField("n_tok", IntegerType, nullable = false)))
+  override def prettyName: String = "minhash_rows"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val (grams, sigs, nToks) = MinHashMatch.chunkRowSigs(c.codec, c.header, c.data,
+      c.offs, c.rows, shingleN, numHashes, seed, collectGrams)
+    val empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
+    new DocRows {
+      override def count(i: Int): Int = if (nToks(i) >= shingleN) 1 else 0
+      def row(id: UTF8String, i: Int, j: Int): InternalRow = new GenericInternalRow(Array[Any](id,
+        if (collectGrams) UnsafeArrayData.fromPrimitiveArray(grams(i)) else empty,
+        UnsafeArrayData.fromPrimitiveArray(sigs(i)), nToks(i)))
     }
   }
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3))
+    copy(children = cs)
+}
+
+/** simhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, sig) row per encoded document, sig the 64-bit unigram SimHash
+  * streamed off the codec's wire format through the majority-vote
+  * accumulator (core/SimHashMatch) — bit-identical to SimHash64 on the
+  * decoded array. Every row is emitted (an empty row hashes to 0 on both
+  * paths).
+  */
+case class SimHashRowsGenerator(children: Seq[Expression]) extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("sig", LongType, nullable = false)))
+  override def prettyName: String = "simhash_rows"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val sigs = SimHashMatch.chunkRowSigs(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, sigs(i)))
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** winnow_rows(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, fingerprint) row per encoded document: the winnowing signature
+  * (k-gram rolling hashes, minimum per window of w, distinct sorted)
+  * streamed off the codec's wire format (core/WinnowMatch) — bit-identical
+  * to WinnowFingerprint on the decoded array. Rows shorter than the gram
+  * length get an empty fingerprint, same as the decoded expression.
+  */
+case class WinnowRowsGenerator(children: Seq[Expression], k: Int, w: Int)
+    extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("fingerprint", ArrayType(LongType, containsNull = false), nullable = false)))
+  override def prettyName: String = "winnow_rows"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val fps = WinnowMatch.chunkRowFingerprints(c.codec, c.header, c.data, c.offs, c.rows, k, w)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, UnsafeArrayData.fromPrimitiveArray(fps(i))))
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** span_blocks(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, blk, h1, h2) row per non-overlapping k-token block of each
+  * encoded document, (h1, h2) the 128-bit polynomial block hash
+  * (core/SpanMatch, HashMatch's lanes) streamed off the codec's wire format.
+  * Trailing partial blocks are dropped, mirroring the decoded path.
+  */
+case class SpanBlocksGenerator(children: Seq[Expression], k: Int) extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("blk", IntegerType, nullable = false),
+    StructField("h1", LongType, nullable = false),
+    StructField("h2", LongType, nullable = false)))
+  override def prettyName: String = "span_blocks"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val (l1, l2) = SpanMatch.chunkRowBlocks(c.codec, c.header, c.data, c.offs, c.rows, k)
+    new DocRows {
+      override def count(i: Int): Int = l1(i).length
+      def row(id: UTF8String, i: Int, b: Int): InternalRow =
+        new GenericInternalRow(Array[Any](id, b, l1(i)(b), l2(i)(b)))
+    }
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** set_counts(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
+  * max_tok, bloom) — one (doc_id, n_tok, n_in_set) row per encoded
+  * document, n_in_set counting its tokens in the literal set — blocklist
+  * density / rare-token scoring off compressed storage
+  * (core/SetCountMatch). A chunk the set predicate's stats gate excludes
+  * emits its rows at METADATA cost (id slab + each row's leading varint)
+  * with n_in_set = 0, never touching the data plane.
+  */
+case class SetCountsGenerator(children: Seq[Expression], tokens: Seq[Int])
+    extends DocRowsGenerator {
+  private val pred = SetPredicate(tokens)
+  private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("n_tok", IntegerType, nullable = false),
+    StructField("n_in_set", LongType, nullable = false)))
+  override def prettyName: String = "set_counts"
+  protected def kernel(c: ChunkInput): DocRows =
+    if (!pred.gate(c.codec, c.header, c.stats)) {
+      val nToks = SetCountMatch.rowTokenCounts(c.data, c.offs, c.rows)
+      (id, i, _) => new GenericInternalRow(Array[Any](id, nToks(i), 0L))
+    } else {
+      val (counts, nToks) =
+        SetCountMatch.chunkRowSetCounts(c.codec, c.header, c.data, c.offs, c.rows, sorted)
+      (id, i, _) => new GenericInternalRow(Array[Any](id, nToks(i), counts(i)))
+    }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** token_pos(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
+  * max_tok, bloom) — one (doc_id, n_tok, first_pos) row per encoded
+  * document, first_pos the 1-based position of the target token's first
+  * occurrence (0 when absent) — `array_position` / split-point discovery
+  * off compressed storage (core/PosMatch). Gated like SetCountsGenerator
+  * with a single-token set: an excluded chunk emits first_pos = 0 at
+  * metadata cost.
+  */
+case class TokenPosGenerator(children: Seq[Expression], target: Int) extends DocRowsGenerator {
+  private val pred = SetPredicate(Seq(target))
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("n_tok", IntegerType, nullable = false),
+    StructField("first_pos", IntegerType, nullable = false)))
+  override def prettyName: String = "token_pos"
+  protected def kernel(c: ChunkInput): DocRows =
+    if (!pred.gate(c.codec, c.header, c.stats)) {
+      val nToks = SetCountMatch.rowTokenCounts(c.data, c.offs, c.rows)
+      (id, i, _) => new GenericInternalRow(Array[Any](id, nToks(i), 0))
+    } else {
+      val (poss, nToks) =
+        PosMatch.chunkFirstPositions(c.codec, c.header, c.data, c.offs, c.rows, target)
+      (id, i, _) => new GenericInternalRow(Array[Any](id, nToks(i), poss(i)))
+    }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
+}
+
+/** quality_profiles(doc_ids, data, offsets, row_count, symtab, codec) — one
+  * (doc_id, n_tok, n_distinct, max_run, top_cnt) row per encoded document:
+  * the token-domain quality profile (exact distinct count, longest
+  * equal-token run, mode weight) computed in each codec's wire format
+  * (core/QualityMatch) — a C4/Gopher-style quality gate over a compressed
+  * corpus without decoding a single token array.
+  */
+case class QualityGenerator(children: Seq[Expression]) extends DocRowsGenerator {
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_id", StringType, nullable = false),
+    StructField("n_tok", IntegerType, nullable = false),
+    StructField("n_distinct", IntegerType, nullable = false),
+    StructField("max_run", IntegerType, nullable = false),
+    StructField("top_cnt", IntegerType, nullable = false)))
+  override def prettyName: String = "quality_profiles"
+  protected def kernel(c: ChunkInput): DocRows = {
+    val p = QualityMatch.chunkRowProfiles(c.codec, c.header, c.data, c.offs, c.rows)
+    (id, i, _) => new GenericInternalRow(Array[Any](id, p.nTok(i),
+      p.nDistinct(i), p.maxRun(i), p.topCnt(i)))
+  }
+  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
+    copy(children = cs)
 }
 
 /** Chunk-granularity token histogram: (token, count) pairs for one whole
@@ -976,55 +583,20 @@ case class RowMetaGenerator(docIds: Expression, data: Expression,
   * histograms under Spark's partial aggregation, so the shuffle carries at
   * most |vocabulary| rows per map task regardless of corpus size.
   */
-case class ChunkTokenCounts(children: Seq[Expression]) extends Expression {
+case class ChunkTokenCounts(children: Seq[Expression]) extends PerChunkExpression {
   // children: data, offsets, row_count, symtab, codec, min_tok, max_tok
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("tok", IntegerType, nullable = false),
     StructField("cnt", LongType, nullable = false))), containsNull = false)
-  override def nullable: Boolean = false
   override def prettyName: String = "chunk_token_counts"
 
-  override protected def doGenCode(ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-                                   ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode) = {
-    val ref = ctx.addReferenceObj("chunkTokenCounts", this, classOf[ChunkTokenCounts].getName)
-    val evals = children.map(_.genCode(ctx))
-    val anyNull = evals.map(_.isNull).mkString(" || ")
-    val args = Seq(
-      s"(byte[]) ${evals(0).value}", s"(byte[]) ${evals(1).value}",
-      s"(int) ${evals(2).value}", s"(byte[]) ${evals(3).value}",
-      s"(org.apache.spark.unsafe.types.UTF8String) ${evals(4).value}",
-      s"(int) ${evals(5).value}", s"(int) ${evals(6).value}").mkString(", ")
-    val code =
-      code"""
-        ${evals.map(_.code).mkString("\n")}
-        org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
-        if ($anyNull) {
-          ${ev.value} = $ref.emptyResult();
-        } else {
-          ${ev.value} = $ref.countChunk($args);
-        }
-      """
-    ev.copy(code = code, isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  def emptyResult(): ArrayData = new GenericArrayData(Array.empty[Any])
-
-  override def eval(input: InternalRow): Any = {
-    val vals = children.map(_.eval(input))
-    if (vals.contains(null)) emptyResult()
-    else countChunk(vals(0).asInstanceOf[Array[Byte]], vals(1).asInstanceOf[Array[Byte]],
-      vals(2).asInstanceOf[Int], vals(3).asInstanceOf[Array[Byte]],
-      vals(4).asInstanceOf[UTF8String], vals(5).asInstanceOf[Int], vals(6).asInstanceOf[Int])
-  }
-
-  def countChunk(data: Array[Byte], offBytes: Array[Byte], rowCount: Int,
-                 header: Array[Byte], codecU: UTF8String,
-                 minTok: Int, maxTok: Int): ArrayData = {
-    val offs = Offsets.unpack(offBytes, rowCount)
+  def evalChunk(v: Array[Any]): ArrayData = {
+    val rowCount = v(2).asInstanceOf[Int]
+    val offs = Offsets.unpack(v(1).asInstanceOf[Array[Byte]], rowCount)
     // stats-driven sink: dense fold when the span fits, sorted fold when it
     // does not (CountMatch.TokenSortedFold — replaces the sparse LongMap)
-    val (toks, cnts) = CountMatch.chunkCountsAuto(codecU.toString, header, data,
-      offs, rowCount, minTok, maxTok)
+    val (toks, cnts) = CountMatch.chunkCountsAuto(v(4).toString, v(3).asInstanceOf[Array[Byte]],
+      v(0).asInstanceOf[Array[Byte]], offs, rowCount, v(5).asInstanceOf[Int], v(6).asInstanceOf[Int])
     val rows = new Array[Any](toks.length)
     var i = 0
     while (i < toks.length) {
@@ -1093,468 +665,4 @@ case class BigramCountsGenerator(children: Seq[Expression])
 
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
     copy(children = cs)
-}
-
-/** content_hashes(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, h1, h2) row per encoded document, where
-  * (h1, h2) is the 128-bit compressed-domain content hash of the row's
-  * decoded token sequence (HashMatch kernels: FSST code-fragment streaming,
-  * RLE closed-form run folds, dict/packed table loads — no decoded array
-  * ever materializes). Doc ids are zero-copy UTF8String views over the
-  * packed id slab; the only per-chunk allocation is 16 bytes/row of hash
-  * lanes. Downstream groupBy(h1, h2) dedups exactly while shuffling 16-byte
-  * keys instead of token payloads.
-  */
-case class ContentHashesGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("h1", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false)))
-  override def prettyName: String = "content_hashes"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (h1, h2) = HashMatch.chunkRowHashes(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, h1(i), h2(i)))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
-}
-
-/** minhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, grams?, sig) row per encoded document
-  * with at least `shingleN` tokens, where sig is the k-permutation MinHash
-  * signature and grams the sorted distinct shingle-hash set, both computed
-  * by streaming the codec's wire format through a rolling window
-  * (core/MinHashMatch) — bit-identical to ShingleHashes + MinHashSig on the
-  * decoded array, with no decoded array in the plan. Rows shorter than the
-  * shingle length are dropped here, mirroring the decoded path's
-  * `n_tok >= shingleN` filter (their all-sentinel signatures would
-  * otherwise band every short row with every other short row).
-  * With collectGrams=false the grams column is an empty array per row —
-  * sig-only callers skip the O(n_tok) gram allocation entirely.
-  */
-case class MinHashRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    shingleN: Int, numHashes: Int, seed: Long, collectGrams: Boolean)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("grams", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("sig", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("n_tok", IntegerType, nullable = false)))
-  override def prettyName: String = "minhash_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (grams, sigs, nToks) = MinHashMatch.chunkRowSigs(codecName, header, bytes,
-      offs, rows, shingleN, numHashes, seed, collectGrams)
-    val empty = UnsafeArrayData.fromPrimitiveArray(Array.emptyLongArray)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      private var nextRow: InternalRow = advance()
-      private def advance(): InternalRow = {
-        while (i < rows) {
-          var len = 0; var shift = 0; var b = 0
-          do {
-            b = ids(p) & 0xff; p += 1
-            len |= (b & 0x7f) << shift; shift += 7
-          } while ((b & 0x80) != 0)
-          val id = UTF8String.fromBytes(ids, p, len)
-          p += len
-          val row = i
-          i += 1
-          if (nToks(row) >= shingleN) {
-            val g = if (collectGrams) UnsafeArrayData.fromPrimitiveArray(grams(row)) else empty
-            return new GenericInternalRow(Array[Any](id, g,
-              UnsafeArrayData.fromPrimitiveArray(sigs(row)), nToks(row)))
-          }
-        }
-        null
-      }
-      def hasNext: Boolean = nextRow != null
-      def next(): InternalRow = {
-        val out = nextRow
-        nextRow = advance()
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
-}
-
-/** simhash_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, sig) row per encoded document, where sig
-  * is the 64-bit unigram SimHash computed by streaming the codec's wire
-  * format through the majority-vote accumulator (core/SimHashMatch) —
-  * bit-identical to SimHash64 on the decoded array, with no decoded array
-  * in the plan. Every row is emitted (the decoded path applies no length
-  * filter; an empty row hashes to 0 on both paths). Doc ids are zero-copy
-  * UTF8String views over the packed id slab; the only per-chunk allocation
-  * is 8 bytes/row of signatures.
-  */
-case class SimHashRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("sig", LongType, nullable = false)))
-  override def prettyName: String = "simhash_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val sigs = SimHashMatch.chunkRowSigs(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, sigs(i)))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
-}
-
-/** winnow_rows(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, fingerprint) row per encoded document,
-  * where fingerprint is the winnowing document signature (k-gram rolling
-  * hashes, minimum per window of w, distinct sorted) computed by streaming
-  * the codec's wire format through core/WinnowMatch — bit-identical to
-  * WinnowFingerprint on the decoded array, with no decoded array in the
-  * plan. Rows shorter than the gram length get an empty fingerprint, same
-  * as the decoded expression (the downstream explode drops them).
-  */
-case class WinnowRowsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    k: Int, w: Int)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("fingerprint", ArrayType(LongType, containsNull = false), nullable = false)))
-  override def prettyName: String = "winnow_rows"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val fps = WinnowMatch.chunkRowFingerprints(codecName, header, bytes, offs, rows, k, w)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id,
-          UnsafeArrayData.fromPrimitiveArray(fps(i))))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
-}
-
-/** span_blocks(doc_ids, data, offsets, row_count, symtab, codec) — lazy
-  * generator emitting one (doc_id, blk, h1, h2) row per non-overlapping
-  * k-token block of each encoded document, where (h1, h2) is the 128-bit
-  * polynomial block hash (core/SpanMatch, HashMatch's lanes) computed by
-  * streaming the codec's wire format — no decoded token array and no
-  * materialized block-content arrays in the plan. Trailing partial blocks
-  * are dropped, mirroring the decoded path.
-  */
-case class SpanBlocksGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    k: Int)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] = Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("blk", IntegerType, nullable = false),
-    StructField("h1", LongType, nullable = false),
-    StructField("h2", LongType, nullable = false)))
-  override def prettyName: String = "span_blocks"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val (l1, l2) = SpanMatch.chunkRowBlocks(codecName, header, bytes, offs, rows, k)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var b = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      private var id: UTF8String = _
-      private def readId(): Unit = {
-        var len = 0; var shift = 0; var bb = 0
-        do {
-          bb = ids(p) & 0xff; p += 1
-          len |= (bb & 0x7f) << shift; shift += 7
-        } while ((bb & 0x80) != 0)
-        id = UTF8String.fromBytes(ids, p, len)
-        p += len
-      }
-      private def skipEmpty(): Unit = {
-        while (i < rows && b >= l1(i).length) {
-          i += 1; b = 0
-          if (i < rows) readId()
-        }
-      }
-      // prime: read row 0's id, then position on the first non-empty row
-      if (rows > 0) readId()
-      skipEmpty()
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        val out = new GenericInternalRow(Array[Any](id, b, l1(i)(b), l2(i)(b)))
-        b += 1
-        skipEmpty()
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
-}
-
-/** set_counts(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
-  * max_tok, bloom) — lazy generator emitting one (doc_id, n_tok, n_in_set)
-  * row per encoded document, where n_in_set counts the document's tokens
-  * that belong to the (sorted) literal set — blocklist density / rare-token
-  * scoring off compressed storage (core/SetCountMatch). The zone-map +
-  * bloom gate mirrors ChunkSetDocIds: a chunk that cannot contain any set
-  * member emits its rows at METADATA cost (id slab + each row's leading
-  * varint) with n_in_set = 0, never touching the data plane — at 100 TB a
-  * rare set prices the whole pass near the id-slab scan.
-  */
-case class SetCountsGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    minTok: Expression, maxTok: Expression, bloom: Expression, tokens: Seq[Int])
-    extends Expression with Generator with CodegenFallback {
-  private val sorted: Array[Int] = SetMatch.sortedSet(tokens.toArray)
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec, minTok, maxTok, bloom)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("n_tok", IntegerType, nullable = false),
-    StructField("n_in_set", LongType, nullable = false)))
-  override def prettyName: String = "set_counts"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val gated = !SetMatch.chunkOverlaps(sorted,
-        minTok.eval(input).asInstanceOf[Int], maxTok.eval(input).asInstanceOf[Int]) ||
-      !SetMatch.chunkMayContainAny(bloom.eval(input).asInstanceOf[Array[Byte]], sorted)
-    val (counts, nToks) =
-      if (gated) (null: Array[Long], SetCountMatch.rowTokenCounts(bytes, offs, rows))
-      else {
-        val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-        val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-        SetCountMatch.chunkRowSetCounts(codecName, header, bytes, offs, rows, sorted)
-      }
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, nToks(i),
-          if (counts == null) 0L else counts(i)))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5), minTok = cs(6), maxTok = cs(7), bloom = cs(8))
-}
-
-/** token_pos(doc_ids, data, offsets, row_count, symtab, codec, min_tok,
-  * max_tok, bloom) — lazy generator emitting one (doc_id, n_tok, first_pos)
-  * row per encoded document, where first_pos is the 1-based position of the
-  * first occurrence of the target token (0 when absent) — the
-  * `array_position` / split-point-discovery primitive (first EOS, separator,
-  * special token) off compressed storage (core/PosMatch). The zone-map +
-  * bloom gate mirrors SetCountsGenerator with a single-token set: a chunk
-  * that cannot contain the target emits its rows at METADATA cost with
-  * first_pos = 0, never touching the data plane.
-  */
-case class TokenPosGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression,
-    minTok: Expression, maxTok: Expression, bloom: Expression, target: Int)
-    extends Expression with Generator with CodegenFallback {
-  private val sorted: Array[Int] = SetMatch.sortedSet(Array(target))
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec, minTok, maxTok, bloom)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("n_tok", IntegerType, nullable = false),
-    StructField("first_pos", IntegerType, nullable = false)))
-  override def prettyName: String = "token_pos"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val gated = !SetMatch.chunkOverlaps(sorted,
-        minTok.eval(input).asInstanceOf[Int], maxTok.eval(input).asInstanceOf[Int]) ||
-      !SetMatch.chunkMayContainAny(bloom.eval(input).asInstanceOf[Array[Byte]], sorted)
-    val (poss, nToks) =
-      if (gated) (null: Array[Int], SetCountMatch.rowTokenCounts(bytes, offs, rows))
-      else {
-        val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-        val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-        PosMatch.chunkFirstPositions(codecName, header, bytes, offs, rows, target)
-      }
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var p = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(p) & 0xff; p += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, p, len)
-        p += len
-        val out = new GenericInternalRow(Array[Any](id, nToks(i),
-          if (poss == null) 0 else poss(i)))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5), minTok = cs(6), maxTok = cs(7), bloom = cs(8))
-}
-
-/** quality_profiles(doc_ids, data, offsets, row_count, symtab, codec) —
-  * lazy generator emitting one (doc_id, n_tok, n_distinct, max_run, top_cnt)
-  * row per encoded document: the token-domain quality profile (exact
-  * distinct count, longest equal-token run, mode weight) computed in each
-  * codec's wire format (core/QualityMatch) — a C4/Gopher-style quality gate
-  * over a compressed corpus without decoding a single token array.
-  */
-case class QualityGenerator(docIds: Expression, data: Expression,
-    offsets: Expression, rowCount: Expression, symtab: Expression, codec: Expression)
-    extends Expression with Generator with CodegenFallback {
-  override def children: Seq[Expression] =
-    Seq(docIds, data, offsets, rowCount, symtab, codec)
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("n_tok", IntegerType, nullable = false),
-    StructField("n_distinct", IntegerType, nullable = false),
-    StructField("max_run", IntegerType, nullable = false),
-    StructField("top_cnt", IntegerType, nullable = false)))
-  override def prettyName: String = "quality_profiles"
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val ids = docIds.eval(input).asInstanceOf[Array[Byte]]
-    val bytes = data.eval(input).asInstanceOf[Array[Byte]]
-    val rows = rowCount.eval(input).asInstanceOf[Int]
-    if (rows == 0) return Iterator.empty
-    val offs = Offsets.unpack(offsets.eval(input).asInstanceOf[Array[Byte]], rows)
-    val header = symtab.eval(input).asInstanceOf[Array[Byte]]
-    val codecName = codec.eval(input).asInstanceOf[UTF8String].toString
-    val p = QualityMatch.chunkRowProfiles(codecName, header, bytes, offs, rows)
-    new Iterator[InternalRow] {
-      private var i = 0
-      private var pos = 0 // cursor into the packed id slab (varint len + bytes)
-      def hasNext: Boolean = i < rows
-      def next(): InternalRow = {
-        var len = 0; var shift = 0; var b = 0
-        do {
-          b = ids(pos) & 0xff; pos += 1
-          len |= (b & 0x7f) << shift; shift += 7
-        } while ((b & 0x80) != 0)
-        val id = UTF8String.fromBytes(ids, pos, len)
-        pos += len
-        val out = new GenericInternalRow(Array[Any](id, p.nTok(i),
-          p.nDistinct(i), p.maxRun(i), p.topCnt(i)))
-        i += 1
-        out
-      }
-    }
-  }
-  override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]) =
-    copy(docIds = cs(0), data = cs(1), offsets = cs(2), rowCount = cs(3),
-      symtab = cs(4), codec = cs(5))
 }

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.core.{PatternMode, PatternPredicate, RangePredicate, SetPredicate, TokenPredicate}
 import graft.format.EncodedChunk
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -23,12 +24,8 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     pushThroughProjects(plan).transformAllExpressions {
-    case TokenPatternMatch(DecodeRow(enc, header, codec), mode, parts) =>
-      CompressedPatternMatch(enc, header, codec, mode, parts)
-    case TokenRangeMatch(DecodeRow(enc, header, codec), lo, hi) =>
-      CompressedRangeMatch(enc, header, codec, lo, hi)
-    case TokenSetMatch(DecodeRow(enc, header, codec), tokens) =>
-      CompressedSetMatch(enc, header, codec, tokens)
+    case TokensMatch(DecodeRow(enc, header, codec), pred) =>
+      CompressedMatch(enc, header, codec, pred)
     // length pushdown: every codec writes a varUInt(n) row prefix, so
     // size(tokens) on the encoded view reads the prefix instead of decoding
     case org.apache.spark.sql.catalyst.expressions.Size(DecodeRow(enc, _, _), _) =>
@@ -167,19 +164,15 @@ object Graft {
         s"parameter out of Int range: $v ($e)")
       v.toInt
     }
-    def patternFn(name: String, mode: String): Unit =
-      reg.createOrReplaceTempFunction(name,
-        es => TokenPatternMatch(es.head, mode, Seq(litInts(es(1)))), "scala_udf")
-    patternFn("contains_tokens", graft.core.PatternMode.Contains)
-    patternFn("starts_with_tokens", graft.core.PatternMode.Prefix)
-    patternFn("ends_with_tokens", graft.core.PatternMode.Suffix)
-    patternFn("equals_tokens", graft.core.PatternMode.Equals)
-    reg.createOrReplaceTempFunction("multi_infix_tokens",
-      es => TokenPatternMatch(es.head, graft.core.PatternMode.MultiInfix, litIntss(es(1))), "scala_udf")
-    reg.createOrReplaceTempFunction("any_token_in_range",
-      es => TokenRangeMatch(es.head, litInt(es(1)), litInt(es(2))), "scala_udf")
-    reg.createOrReplaceTempFunction("any_token_in_set",
-      es => TokenSetMatch(es.head, litInts(es(1))), "scala_udf")
+    def predicateFn(name: String, pred: Seq[Expression] => TokenPredicate): Unit =
+      reg.createOrReplaceTempFunction(name, es => TokensMatch(es.head, pred(es)), "scala_udf")
+    predicateFn("contains_tokens", es => PatternPredicate(PatternMode.Contains, Seq(litInts(es(1)))))
+    predicateFn("starts_with_tokens", es => PatternPredicate(PatternMode.Prefix, Seq(litInts(es(1)))))
+    predicateFn("ends_with_tokens", es => PatternPredicate(PatternMode.Suffix, Seq(litInts(es(1)))))
+    predicateFn("equals_tokens", es => PatternPredicate(PatternMode.Equals, Seq(litInts(es(1)))))
+    predicateFn("multi_infix_tokens", es => PatternPredicate(PatternMode.MultiInfix, litIntss(es(1))))
+    predicateFn("any_token_in_range", es => RangePredicate(litInt(es(1)), litInt(es(2))))
+    predicateFn("any_token_in_set", es => SetPredicate(litInts(es(1))))
     reg.createOrReplaceTempFunction("decode_row",
       es => DecodeRow(es(0), es(1), es(2)), "scala_udf")
     reg.createOrReplaceTempFunction("decode_head",
@@ -225,25 +218,36 @@ object Graft {
   private def col2expr(c: Column): Expression = GraftBridge.expression(c)
   private def mkCol(e: Expression): Column = GraftBridge.column(e)
 
+  // child columns of the chunk-table expressions: the id-slab walk, the
+  // per-codec kernels on top of it, and the compressed-domain counters
+  private val RowCols = Seq("doc_ids", "data", "offsets", "row_count")
+  private val KernelCols = RowCols ++ Seq("symtab", "codec")
+  private val CountCols =
+    Seq("data", "offsets", "row_count", "symtab", "codec", "stats.min_tok", "stats.max_tok")
+  private def chunkExprs(names: Seq[String]): Seq[Expression] = names.map(n => col2expr(col(n)))
+  private def statsCols(pred: TokenPredicate): Seq[String] = pred.statsFields.map("stats." + _)
+
   // --- column functions ----------------------------------------------------
 
   def decodeRow(enc: Column, header: Column, codec: Column): Column =
     mkCol(DecodeRow(col2expr(enc), col2expr(header), col2expr(codec)))
 
+  private def tokensMatch(tokens: Column, pred: TokenPredicate): Column =
+    mkCol(TokensMatch(col2expr(tokens), pred))
   def containsTokens(tokens: Column, pattern: Seq[Int]): Column =
-    mkCol(TokenPatternMatch(col2expr(tokens), graft.core.PatternMode.Contains, Seq(pattern)))
+    tokensMatch(tokens, PatternPredicate(PatternMode.Contains, Seq(pattern)))
   def startsWithTokens(tokens: Column, pattern: Seq[Int]): Column =
-    mkCol(TokenPatternMatch(col2expr(tokens), graft.core.PatternMode.Prefix, Seq(pattern)))
+    tokensMatch(tokens, PatternPredicate(PatternMode.Prefix, Seq(pattern)))
   def endsWithTokens(tokens: Column, pattern: Seq[Int]): Column =
-    mkCol(TokenPatternMatch(col2expr(tokens), graft.core.PatternMode.Suffix, Seq(pattern)))
+    tokensMatch(tokens, PatternPredicate(PatternMode.Suffix, Seq(pattern)))
   def equalsTokens(tokens: Column, pattern: Seq[Int]): Column =
-    mkCol(TokenPatternMatch(col2expr(tokens), graft.core.PatternMode.Equals, Seq(pattern)))
+    tokensMatch(tokens, PatternPredicate(PatternMode.Equals, Seq(pattern)))
   def multiInfixTokens(tokens: Column, parts: Seq[Seq[Int]]): Column =
-    mkCol(TokenPatternMatch(col2expr(tokens), graft.core.PatternMode.MultiInfix, parts))
+    tokensMatch(tokens, PatternPredicate(PatternMode.MultiInfix, parts))
   def anyTokenInRange(tokens: Column, lo: Int, hi: Int): Column =
-    mkCol(TokenRangeMatch(col2expr(tokens), lo, hi))
+    tokensMatch(tokens, RangePredicate(lo, hi))
   def anyTokenInSet(tokens: Column, set: Seq[Int]): Column =
-    mkCol(TokenSetMatch(col2expr(tokens), set))
+    tokensMatch(tokens, SetPredicate(set))
 
   // --- views over the chunk table -------------------------------------------
 
@@ -256,8 +260,7 @@ object Graft {
   def encodedRows(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("codec"), col("symtab"), col("source"),
-        mkCol(EncodedRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")))))
+        mkCol(EncodedRowsGenerator(chunkExprs(RowCols))))
       .select(col("doc_id"), col("source"), col("enc"), col("symtab"), col("codec"))
       .withColumn("tokens", decodeRow(col("enc"), col("symtab"), col("codec")))
   }
@@ -274,8 +277,7 @@ object Graft {
   def rowMeta(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("source"),
-        mkCol(RowMetaGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")))))
+        mkCol(RowMetaGenerator(chunkExprs(RowCols))))
       .select(col("doc_id"), col("source"), col("n_tok"))
   }
 
@@ -287,9 +289,7 @@ object Graft {
   def contentHashes(chunks: DataFrame): DataFrame = {
     chunks
       .select(col("source"),
-        mkCol(ContentHashesGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-          col2expr(col("offsets")), col2expr(col("row_count")),
-          col2expr(col("symtab")), col2expr(col("codec")))))
+        mkCol(ContentHashesGenerator(chunkExprs(KernelCols))))
       .select(col("doc_id"), col("source"), col("h1"), col("h2"))
   }
 
@@ -317,9 +317,7 @@ object Graft {
   def minhashRowsEncoded(chunks: DataFrame, shingleN: Int, numHashes: Int,
                          seed: Long, collectGrams: Boolean = true): DataFrame =
     chunks.select(
-      mkCol(MinHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
+      mkCol(MinHashRowsGenerator(chunkExprs(KernelCols),
         shingleN, numHashes, seed, collectGrams)))
 
   /** MinHash + LSH near-duplicate pairs over the ENCODED table: signatures
@@ -341,9 +339,7 @@ object Graft {
     */
   def simhashRowsEncoded(chunks: DataFrame): DataFrame =
     chunks.select(
-      mkCol(SimHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")))))
+      mkCol(SimHashRowsGenerator(chunkExprs(KernelCols))))
 
   /** SimHash near-duplicate pairs over the ENCODED table: signatures stream
     * off the compressed chunks (SimHashMatch), then banding + exact-Hamming
@@ -360,9 +356,7 @@ object Graft {
     */
   def winnowRowsEncoded(chunks: DataFrame, k: Int, w: Int): DataFrame =
     chunks.select(
-      mkCol(WinnowRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")), k, w)))
+      mkCol(WinnowRowsGenerator(chunkExprs(KernelCols), k, w)))
 
   /** Fingerprint-sharing pairs over the ENCODED table: winnowing signatures
     * stream off the compressed chunks (WinnowMatch), then the explode +
@@ -381,9 +375,7 @@ object Graft {
     */
   def spanBlocksEncoded(chunks: DataFrame, k: Int): DataFrame =
     chunks.select(
-      mkCol(SpanBlocksGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")), k)))
+      mkCol(SpanBlocksGenerator(chunkExprs(KernelCols), k)))
 
   /** C4-style duplicate-span detection over the ENCODED table: block keys
     * are 128-bit hashes streamed off the compressed chunks (SpanMatch), the
@@ -403,9 +395,7 @@ object Graft {
     */
   def gramRowsEncoded(chunks: DataFrame, shingleN: Int): DataFrame =
     chunks.select(col("source"),
-      mkCol(MinHashRowsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
+      mkCol(MinHashRowsGenerator(chunkExprs(KernelCols),
         shingleN, 0, 0L, collectGrams = true)))
       .select(col("doc_id"), col("source"), col("grams"))
 
@@ -456,6 +446,16 @@ object Graft {
       minShared)
   }
 
+  /** The zone-gated column projection feeding the late-materialization RDD
+    * bridge — extracted so PlanAudit can pin its PushedFilters (the bridge
+    * hides this subplan behind a Scan ExistingRDD in the outer plan).
+    */
+  private[graft] def lateMatProjection(chunkDf: DataFrame,
+                                       parts: Seq[Seq[Int]]): DataFrame =
+    zoneGateAll(chunkDf, parts.flatten)
+      .select(col("codec"), col("symtab"), col("data"),
+        col("offsets"), col("row_count"), col("doc_ids"), col("source"))
+
   /** Zone-map gate as a PLAN-level conjunct, not just expression-internal
     * logic: a chunk can contain a match only if every required token lies in
     * its [min_tok, max_tok] interval, so the implied filter on the persisted
@@ -472,68 +472,45 @@ object Graft {
     * gates (zone map, blooms, set cover). Conservative and exact-safe: the
     * matcher still evaluates the surviving chunks.
     */
-  /** The zone-gated column projection feeding the late-materialization RDD
-    * bridge — extracted so PlanAudit can pin its PushedFilters (the bridge
-    * hides this subplan behind a Scan ExistingRDD in the outer plan).
-    */
-  private[graft] def lateMatProjection(chunkDf: DataFrame,
-                                       parts: Seq[Seq[Int]]): DataFrame =
-    zoneGateAll(chunkDf, parts.flatten)
-      .select(col("codec"), col("symtab"), col("data"),
-        col("offsets"), col("row_count"), col("doc_ids"), col("source"))
-
   private def zoneGateAll(chunks: DataFrame, required: Seq[Int]): DataFrame =
     if (required.isEmpty) chunks
     else chunks.filter(col("stats.min_tok") <= lit(required.min) &&
       col("stats.max_tok") >= lit(required.max))
 
+  /** Matching doc ids of each chunk row under `pred` (one ChunkDocIds eval
+    * per chunk), reading only the stats columns the predicate's gate needs.
+    */
+  private[graft] def chunkDocIds(pred: TokenPredicate): Column =
+    mkCol(ChunkDocIds(chunkExprs(KernelCols ++ statsCols(pred)), pred))
+
   /** The fast scan path: chunk-granularity pattern match returning matching
     * doc_ids, with bloom-based whole-chunk skipping. One expression eval per
     * chunk ≈ one Engine::Scan per block in the reference.
     */
-  def scanPattern(chunks: DataFrame, mode: String, parts: Seq[Seq[Int]]): DataFrame = {
-    val matchExpr = ChunkMatchDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.symbol_bitmap")), col2expr(col("stats.escaped_bitmap"))),
-      mode, parts)
+  def scanPattern(chunks: DataFrame, mode: String, parts: Seq[Seq[Int]]): DataFrame =
     zoneGateAll(chunks, parts.flatten)
-      .select(explode(mkCol(matchExpr)).as("doc_id"))
-  }
+      .select(explode(chunkDocIds(PatternPredicate(mode, parts))).as("doc_id"))
 
   /** Chunk-granularity range scan (any token in [lo,hi]) with zone-map
     * pruning on the chunk's min/max token stats — the range analog of
     * [[scanPattern]].
     */
-  def scanRange(chunks: DataFrame, lo: Int, hi: Int): DataFrame = {
-    val rangeExpr = ChunkRangeDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok"))),
-      lo, hi)
+  def scanRange(chunks: DataFrame, lo: Int, hi: Int): DataFrame =
     // interval-overlap conjunct, pushed to the storage scan (see zoneGateAll)
     chunks.filter(col("stats.max_tok") >= lit(lo) && col("stats.min_tok") <= lit(hi))
-      .select(explode(mkCol(rangeExpr)).as("doc_id"))
-  }
+      .select(explode(chunkDocIds(RangePredicate(lo, hi))).as("doc_id"))
 
   /** Chunk-granularity set-membership scan (any token ∈ set) with zone-map
     * AND bloom gating — the blocklist filter as a chunk scan.
     */
   def scanSet(chunks: DataFrame, set: Seq[Int]): DataFrame = {
-    val setExpr = ChunkSetDocIds(
-      Seq(col2expr(col("doc_ids")), col2expr(col("data")), col2expr(col("offsets")),
-        col2expr(col("row_count")), col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap"))),
-      set)
     // ANY-semantics: a chunk can match only if its token interval overlaps
     // the set's hull [set.min, set.max] — conservative, pushed to storage
     val gated =
       if (set.isEmpty) chunks
       else chunks.filter(col("stats.max_tok") >= lit(set.min) &&
         col("stats.min_tok") <= lit(set.max))
-    gated
-      .select(explode(mkCol(setExpr)).as("doc_id"))
+    gated.select(explode(chunkDocIds(SetPredicate(set))).as("doc_id"))
   }
 
   /** Per-document token-SET COUNTS over the encoded table: (doc_id, n_tok,
@@ -547,11 +524,7 @@ object Graft {
     */
   def setCountsEncoded(chunks: DataFrame, set: Seq[Int]): DataFrame =
     chunks.select(
-      mkCol(SetCountsGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap")), set)))
+      mkCol(SetCountsGenerator(chunkExprs(KernelCols ++ statsCols(SetPredicate(set))), set)))
 
   /** Per-document FIRST POSITION of a target token over the encoded table:
     * (doc_id, n_tok, first_pos) with first_pos the 1-based position of the
@@ -564,11 +537,8 @@ object Graft {
     */
   def firstPosEncoded(chunks: DataFrame, target: Int): DataFrame =
     chunks.select(
-      mkCol(TokenPosGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok")),
-        col2expr(col("stats.symbol_bitmap")), target)))
+      mkCol(TokenPosGenerator(
+        chunkExprs(KernelCols ++ statsCols(SetPredicate(Seq(target)))), target)))
 
   /** Per-document token-quality profile over the encoded table: (doc_id,
     * source, n_tok, n_distinct, max_run, top_cnt) — exact distinct-token
@@ -582,9 +552,7 @@ object Graft {
     */
   def qualityEncoded(chunks: DataFrame): DataFrame =
     chunks.select(col("source"),
-      mkCol(QualityGenerator(col2expr(col("doc_ids")), col2expr(col("data")),
-        col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")))))
+      mkCol(QualityGenerator(chunkExprs(KernelCols))))
       .select(col("doc_id"), col("source"), col("n_tok"),
         col("n_distinct"), col("max_run"), col("top_cnt"))
 
@@ -595,12 +563,8 @@ object Graft {
     * decompressing a row.
     */
   def tokenHistogram(chunks: DataFrame): DataFrame = {
-    val countsExpr = ChunkTokenCounts(
-      Seq(col2expr(col("data")), col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok"))))
     chunks
-      .select(explode(mkCol(countsExpr)).as("tc"))
+      .select(explode(mkCol(ChunkTokenCounts(chunkExprs(CountCols)))).as("tc"))
       .groupBy(col("tc.tok").as("tok"))
       .agg(sum(col("tc.cnt")).as("n"))
   }
@@ -621,16 +585,18 @@ object Graft {
     // shifts sign-extend each half back into int32 range BEFORE the cast
     // (ANSI-safe — no truncating cast), so any int32 pair, negative tokens
     // included, round-trips exactly.
-    chunks
-      .select(mkCol(BigramCountsGenerator(
-        Seq(col2expr(col("data")), col2expr(col("offsets")), col2expr(col("row_count")),
-          col2expr(col("symtab")), col2expr(col("codec")),
-          col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok"))))))
+    bigramCounts(chunks)
       .groupBy(col("pair"))
       .agg(sum(col("cnt")).as("n"))
       .select(shiftright(col("pair"), 32).cast("int").as("t1"),
         shiftright(shiftleft(col("pair"), 32), 32).cast("int").as("t2"), col("n"))
   }
+
+  /** Per-chunk (pair, cnt) rows of the bigram generator, before any
+    * aggregation (pair = t1 << 32 | t2 zero-extended).
+    */
+  private[graft] def bigramCounts(chunks: DataFrame): DataFrame =
+    chunks.select(mkCol(BigramCountsGenerator(chunkExprs(CountCols))))
 
   /** Late materialization (the reference's decode-only-matches behavior,
     * /root/reference/sketch.cc:921-927): match on compressed bytes, then
@@ -645,73 +611,44 @@ object Graft {
   }
 
   /** Late materialization on the InternalRow plane (mirrors
-    * EncodeJob.decodeDf — round 4): the match runs on compressed bytes in
-    * each codec's own domain (FSST DFA / packed bit-phase / decode-then-
-    * match fallback), matched rows decode straight to InternalRows, matched
-    * doc ids become zero-copy UTF8String views over the packed id slab. No
-    * EncodedChunk or TokenRow object ever materializes.
+    * EncodeJob.decodeDf — round 4): the match runs on compressed bytes with
+    * the same per-codec row test the chunk scan uses
+    * (PatternPredicate.prepare; a chunk it rules out decodes nothing),
+    * matched rows decode straight to InternalRows, matched doc ids become
+    * zero-copy UTF8String views over the packed id slab. No EncodedChunk or
+    * TokenRow object ever materializes.
     */
   def scanAndDecodeDf(chunkDf: DataFrame, mode: String, parts: Seq[Seq[Int]]): DataFrame = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
-    import org.apache.spark.unsafe.types.UTF8String
     val spark = chunkDf.sparkSession
-    val partsArr = parts.map(_.toArray).toArray
+    val pred = PatternPredicate(mode, parts)
     val proj = lateMatProjection(chunkDf, parts)
     val rdd = GraftBridge.toInternalRdd(proj).mapPartitions { it =>
-      val normalized = graft.core.PatternMode.normalize(mode, partsArr)
       it.flatMap { r =>
         // copy every field out of the (reused) scan row before the lazy
         // per-row iterator (getBinary copies; UTF8Strings cloned)
         val codec = r.getUTF8String(0).toString
         val symtab = r.getBinary(1)
         val data = r.getBinary(2)
-        val offs = graft.format.Offsets.unpack(r.getBinary(3), r.getInt(4))
         val rowCount = r.getInt(4)
-        val docIds = r.getBinary(5)
+        val offs = graft.format.Offsets.unpack(r.getBinary(3), rowCount)
+        val ids = new graft.format.PackedIds.Cursor(r.getBinary(5))
         val source = r.getUTF8String(6).clone()
-        val dec = graft.core.Codecs.byName(codec).decoder(symtab)
-        val matches: Int => Boolean =
-          if (codec == graft.core.FsstTokenCodec.name) {
-            val st = graft.core.SymTab.fromBytes(symtab)
-            val pm = new graft.core.PatternMachine(normalized, st)
-            i => graft.core.FsstMatch.eval(mode, pm, data, offs(i), offs(i + 1))
-          } else if (graft.core.PackedAnchor.supports(codec, mode)) {
-            val prep = graft.core.PackedAnchor.prepare(codec, symtab, mode, normalized)
-            i => prep.evalRow(data, offs(i), offs(i + 1))
-          } else {
-            i => graft.core.TokenMatch.eval(mode, normalized,
-              dec.decode(data, offs(i), offs(i + 1)))
-          }
-        new Iterator[InternalRow] {
+        val test = pred.prepare(codec, symtab)
+        if (test == null) Iterator.empty
+        else new Iterator[InternalRow] {
+          private val dec = graft.core.Codecs.byName(codec).decoder(symtab)
           private var i = 0
-          private var idPos = 0
-          private var idAt = 0 // row index the id cursor sits on
-          private def idOf(row: Int): UTF8String = {
-            // sequential cursor over the packed slab; rows only move forward
-            while (idAt < row) {
-              var len = 0; var shift = 0; var b = 0
-              do {
-                b = docIds(idPos) & 0xff; idPos += 1
-                len |= (b & 0x7f) << shift; shift += 7
-              } while ((b & 0x80) != 0)
-              idPos += len
-              idAt += 1
-            }
-            var len = 0; var shift = 0; var b = 0
-            var p = idPos
-            do {
-              b = docIds(p) & 0xff; p += 1
-              len |= (b & 0x7f) << shift; shift += 7
-            } while ((b & 0x80) != 0)
-            UTF8String.fromBytes(docIds, p, len)
-          }
           private def advance(): Unit =
-            while (i < rowCount && !matches(i)) i += 1
+            while (i < rowCount && !test(data, offs(i), offs(i + 1))) {
+              ids.skip()
+              i += 1
+            }
           advance()
           def hasNext: Boolean = i < rowCount
           def next(): InternalRow = {
-            val id = idOf(i)
+            val id = ids.next()
             val toks = dec.decode(data, offs(i), offs(i + 1))
             i += 1
             advance()

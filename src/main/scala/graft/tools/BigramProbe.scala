@@ -27,13 +27,7 @@ object BigramProbe {
       sum("n_tokens").as("tokens"), sum("row_count").as("rows"))
       .collect().foreach(println)
 
-    import graft.query.{BigramCountsGenerator}
-    import org.apache.spark.sql.GraftBridge
-    def col2expr(c: org.apache.spark.sql.Column) = GraftBridge.expression(c)
-    val gen = chunks.select(GraftBridge.column(BigramCountsGenerator(
-      Seq(col2expr(col("data")), col2expr(col("offsets")), col2expr(col("row_count")),
-        col2expr(col("symtab")), col2expr(col("codec")),
-        col2expr(col("stats.min_tok")), col2expr(col("stats.max_tok"))))))
+    val gen = Graft.bigramCounts(chunks)
 
     val variants: Seq[(String, () => Long)] = Seq(
       // generator only: stream every (t1,t2,cnt) row through a trivial agg

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.core.PatternMode
+import graft.core.{PatternMode, PatternPredicate}
 import graft.format.EncodedChunk
 import graft.query.Graft
 import graft.spark.SyntheticData
@@ -40,6 +40,9 @@ object PatternProfile {
     val input = spark.read.parquet(inputPath)
     val chunks = spark.read.parquet(chunksPath)
 
+    // the chunk scan's matcher column (doc ids of each chunk's matching rows)
+    def matchCol = Graft.chunkDocIds(PatternPredicate(PatternMode.Contains, Seq(pat)))
+
     def best(name: String)(f: => Long): Unit = {
       f
       val r = (1 to 5).map { _ =>
@@ -58,13 +61,7 @@ object PatternProfile {
     }
     best("chunk_scan size(arr) only") {
       // same expression, but SUM of per-chunk match counts without Generate
-      val m = graft.query.ChunkMatchDocIds(
-        Seq(col("doc_ids"), col("data"), col("offsets"), col("row_count"),
-          col("symtab"), col("codec"), col("stats.symbol_bitmap"),
-          col("stats.escaped_bitmap")).map(c => org.apache.spark.sql.GraftBridge.expression(c)),
-        PatternMode.Contains, Seq(pat))
-      chunks.select(size(org.apache.spark.sql.GraftBridge.column(m)).as("n"))
-        .agg(sum("n")).collect()(0).getLong(0)
+      chunks.select(size(matchCol).as("n")).agg(sum("n")).collect()(0).getLong(0)
     }
     best("flatmap_match_count") {
       chunks.as[EncodedChunk].mapPartitions { it =>
@@ -87,14 +84,6 @@ object PatternProfile {
       Graft.scanAndDecode(chunks.as[EncodedChunk], PatternMode.Contains, Seq(pat)).count()
     }
     // --- decomposition variants for the Generate overhead ---
-    def matchCol = {
-      val m = graft.query.ChunkMatchDocIds(
-        Seq(col("doc_ids"), col("data"), col("offsets"), col("row_count"),
-          col("symtab"), col("codec"), col("stats.symbol_bitmap"),
-          col("stats.escaped_bitmap")).map(c => org.apache.spark.sql.GraftBridge.expression(c)),
-        PatternMode.Contains, Seq(pat))
-      org.apache.spark.sql.GraftBridge.column(m)
-    }
     best("explode(direct)") {
       chunks.select(explode(matchCol).as("doc_id")).count()
     }

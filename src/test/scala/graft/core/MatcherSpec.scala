@@ -357,8 +357,8 @@ class MatcherSpec extends AnyFunSuite {
       }
       // the remaining kernels must agree that nothing matches / counts zero
       rows.indices.foreach { i =>
-        assert(!SetMatch.evalRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1), Array(1, 2)), c.codec)
-        assert(!RangeMatch.evalRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1), 0, 100), c.codec)
+        assert(!SetPredicate(Seq(1, 2)).matchesRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1)), c.codec)
+        assert(!RangePredicate(0, 100).matchesRow(c.codec, c.symtab, c.data, offs(i), offs(i + 1)), c.codec)
       }
       val (cnt, ntok) = SetCountMatch.chunkRowSetCounts(
         c.codec, c.symtab, c.data, offs, c.row_count, Array(1, 2))

@@ -59,13 +59,16 @@ class BucketSpec extends AnyFunSuite {
     // for this input (nested-array vectorized parquet reads supported)
     assert(org.apache.spark.sql.GraftBridge.columnarScan(input.toDF()).isDefined,
       "expected a bare columnar parquet scan for this input")
+    // a derived input over the same scan takes the row pack path
+    val derived = input.map(identity)
+    assert(org.apache.spark.sql.GraftBridge.columnarScan(derived.toDF()).isEmpty,
+      "expected a derived input to take the row path")
     val opts = EncodeOptions(numBuckets = 16)
-    def fingerprint(): Seq[(Long, Long, String, Int)] =
-      EncodeJob.encode(input, opts).collect()
+    def fingerprint(ds: org.apache.spark.sql.Dataset[TokenRow]): Seq[(Long, Long, String, Int)] =
+      EncodeJob.encode(ds, opts).collect()
         .map(c => (c.chunk_id, c.crc, c.codec, c.row_count)).sortBy(_._1).toSeq
-    val columnar = fingerprint()
-    sys.props("graft.map.mode") = "rows"
-    val viaRows = try fingerprint() finally sys.props.remove("graft.map.mode")
+    val columnar = fingerprint(input)
+    val viaRows = fingerprint(derived)
     assert(columnar == viaRows, "columnar pack diverged from the row pack")
     assert(columnar.nonEmpty)
   }

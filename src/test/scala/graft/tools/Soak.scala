@@ -244,7 +244,7 @@ object Soak {
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
             rows.indices.forall { i =>
-              RangeMatch.evalRow(codec.name, header, data, offs(i), offs(i + 1), lo, hi) ==
+              RangePredicate(lo, hi).matchesRow(codec.name, header, data, offs(i), offs(i + 1)) ==
                 RangeMatch.evalDecoded(rows(i), lo, hi)
             }
           }
@@ -274,7 +274,7 @@ object Soak {
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
             rows.indices.forall { i =>
-              SetMatch.evalRow(codec.name, header, data, offs(i), offs(i + 1), sorted) ==
+              SetPredicate(sorted.toSeq).matchesRow(codec.name, header, data, offs(i), offs(i + 1)) ==
                 SetMatch.evalDecoded(rows(i), sorted)
             }
           }
@@ -339,7 +339,7 @@ object Soak {
             val scOffs = graft.format.Offsets.unpack(sc.offsets, sc.row_count)
             val noBanned = sorted.isEmpty || SetMatch.contains(sorted, unk) ||
               rows.indices.forall { i =>
-                !SetMatch.evalRow(sc.codec, scHeader, sc.data, scOffs(i), scOffs(i + 1), sorted)
+                !SetPredicate(sorted.toSeq).matchesRow(sc.codec, scHeader, sc.data, scOffs(i), scOffs(i + 1))
               }
             roundTrip && noBanned
           }
