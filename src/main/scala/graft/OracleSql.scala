@@ -201,8 +201,8 @@ object OracleSql {
        |  CAST($bos + sum(CAST(tok AS BIGINT) * (i + 1)) + $eos * (count(*) + 2) AS BIGINT) AS pos_sum
        |FROM __tok GROUP BY doc_id""".stripMargin
 
-  /** Read-side head projection (DecodeHead semantics): per-document sum and
-    * count over the first `k` tokens only.
+  /** Read-side head projection (`slice(tokens, 1, k)` semantics):
+    * per-document sum and count over the first `k` tokens only.
     */
   def headDecodeSql(k: Int): String =
     s"""WITH $tokenizeCtes
@@ -211,8 +211,8 @@ object OracleSql {
        |  CAST(count(*) AS BIGINT) AS n_head
        |FROM __tok WHERE i <= $k GROUP BY doc_id""".stripMargin
 
-  /** Read-side tail projection (DecodeTail semantics): per-document sum and
-    * count over the LAST `k` tokens, with builtin slice semantics — a
+  /** Read-side tail projection (`slice(tokens, −k, k)` semantics):
+    * per-document sum and count over the LAST `k` tokens — a
     * document shorter than k contributes (0, 0), exactly like
     * `slice(tokens, −k, k)` resolving to an empty array.
     */

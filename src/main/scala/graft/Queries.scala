@@ -529,10 +529,10 @@ object Queries {
   }
 
   /** Read-side HEAD projection: `slice(tokens, 1, 16)` on the encoded view
-    * rewrites (PushPatternIntoCompressed) into `decode_head`, a partial
-    * decode that materializes only each row's first 16 tokens — O(k) per
-    * row instead of O(row), the read-side dual of q_truncate_decode's
-    * write-side cut. n_head comes from the varint row prefix
+    * rewrites (PushPatternIntoCompressed) into `decode_slice` with start 1,
+    * a partial decode that materializes only each row's first 16 tokens —
+    * O(k) per row instead of O(row), the read-side dual of
+    * q_truncate_decode's write-side cut. n_head comes from the varint row prefix
     * (least(size, k) → row_token_count), so the full row never decodes
     * anywhere in this plan. DuckDB recomputes head sums positionally.
     */
@@ -543,9 +543,10 @@ object Queries {
       least(size(col("tokens")), lit(16)).cast("long").as("n_head"))
 
   /** Read-side TAIL projection: `slice(tokens, -12, 12)` on the encoded
-    * view rewrites into `decode_tail`, which SKIPS to the cut (FSST counts
-    * code lengths without expanding symbols; packed codecs random-access
-    * the bit stream at n−k) and decodes only the last 12 tokens. Builtin
+    * view rewrites into `decode_slice` with start −12, which SKIPS to the
+    * cut (FSST counts code lengths without expanding symbols; packed codecs
+    * random-access the bit stream at n−k) and decodes only the last 12
+    * tokens. Builtin
     * slice semantics are preserved exactly: rows shorter than 12 slice to
     * EMPTY (min doc length here is 10, so both branches occur). n_tail
     * derives from the varint prefix — no full decode anywhere.

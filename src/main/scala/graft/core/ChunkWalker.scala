@@ -47,14 +47,18 @@ object ChunkWalker {
     case other =>
       val dec = Codecs.byName(other).decoder(header)
       var i = 0
-      while (i < rowCount) {
-        val row = dec.decode(data, offs(i), offs(i + 1))
-        sink.rowStart(i, row.length)
-        var k = 0
-        while (k < row.length) { sink.feed(row(k)); k += 1 }
-        sink.rowEnd(i)
-        i += 1
-      }
+      while (i < rowCount) { walkRow(i, dec.decode(data, offs(i), offs(i + 1)), sink); i += 1 }
+  }
+
+  /** Stream one decoded row through the sink as row `row` — the decoded-array
+    * expressions (pipeline.ShingleHashes, SimHash64, WinnowFingerprint) run
+    * the same sinks as the chunk walk this way.
+    */
+  def walkRow(row: Int, tokens: Array[Int], sink: TokenSink): Unit = {
+    sink.rowStart(row, tokens.length)
+    var k = 0
+    while (k < tokens.length) { sink.feed(tokens(k)); k += 1 }
+    sink.rowEnd(row)
   }
 
   private def walkFsst(st: SymTab, data: Array[Byte], offs: Array[Int],

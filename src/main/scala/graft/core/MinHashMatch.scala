@@ -5,12 +5,14 @@ package graft.core
   * rolling n-token window (ChunkWalker) — no decoded token array, no
   * intermediate shingle array column, ever materializes in the plan.
   *
-  * Semantics are BIT-IDENTICAL to the decoded-domain kernels
-  * (pipeline/Expressions.scala ShingleHashes + MinHashSig): shingle hash =
-  * mix64-chained FNV-offset over the n window tokens; lane i's value =
-  * min over shingles of mix64(shingle ^ mix64(seed + i)); empty set (row
-  * shorter than n) = Long.MaxValue sentinel lanes. Soak fuzzes every codec
-  * against those expressions.
+  * This is the only implementation of the shingle math: the decoded-array
+  * expression pipeline.ShingleHashes feeds its row through [[SigAcc]] (zero
+  * lanes), and pipeline.MinHashSig applies the same lanes to a shingle
+  * array. Shingle hash = mix64-chained FNV-offset over the n window tokens;
+  * lane i's value = min over shingles of mix64(shingle ^ mix64(seed + i));
+  * empty set (row shorter than n) = Long.MaxValue sentinel lanes. Soak and
+  * FingerprintSpec check every codec against a plain reference transcription
+  * of these definitions.
   *
   * RLE fold: after n consecutive equal feeds the window is saturated and
   * every further feed of the same run emits the SAME all-v shingle —
@@ -75,9 +77,8 @@ object MinHashMatch {
       while (i < feeds) { feed(t); i += 1 }
     }
 
-    /** Sorted distinct shingle hashes fed since rowStart — byte-identical to
-      * ShingleHashes (which computes distinct-then-sort; sort-then-unique
-      * yields the same array).
+    /** Sorted distinct shingle hashes fed since rowStart (sort-then-unique
+      * on primitives, no boxed set).
       */
     def gramSet(): Array[Long] = {
       if (ng == 0) return Array.emptyLongArray

@@ -4,10 +4,11 @@ package graft.core
   * streaming each codec's wire format through the unigram majority-vote
   * accumulator (ChunkWalker) — no decoded token array in the plan.
   *
-  * Semantics are BIT-IDENTICAL to the decoded-domain expression
-  * (pipeline/Expressions.scala SimHash64): per token t, h = mix64(t); bit b
-  * of the signature is set iff Σ(±1 per token, + when bit b of h is set)
-  * is > 0. Soak fuzzes every codec against that expression.
+  * This is the only implementation of the SimHash math: the decoded-array
+  * expression pipeline.SimHash64 feeds its row through [[SimAcc]]. Per token
+  * t, h = mix64(t); bit b of the signature is set iff Σ(±1 per token, +
+  * when bit b of h is set) is > 0. Soak and FingerprintSpec check every
+  * codec against a plain reference transcription of that definition.
   *
   * RLE fold: a run of r equal tokens contributes r to the set-bit counters
   * in one step — one mix64 + one add per SET bit per RUN, not per token.

@@ -5,13 +5,14 @@ package graft.core
   * k-token gram window plus a monotonic-deque sliding minimum (ChunkWalker)
   * — no decoded token array in the plan.
   *
-  * Semantics are BIT-IDENTICAL to the decoded-domain expression
-  * (pipeline/Expressions.scala WinnowFingerprint, the SIGMOD'03 scheme):
-  * gram hash = mix64-chained FNV-offset over k window tokens; one window of
-  * width w per gram position (a single whole-row window when the row has
-  * ≤ w grams); minima compared in UNSIGNED 64-bit order; the fingerprint is
-  * the distinct selected minima sorted in SIGNED order (SortedSet[Long]'s
-  * default). Soak fuzzes every codec against that expression.
+  * This is the only implementation of the winnowing math (the SIGMOD'03
+  * scheme): the decoded-array expression pipeline.WinnowFingerprint feeds
+  * its row through [[FpAcc]]. Gram hash = mix64-chained FNV-offset over k
+  * window tokens; one window of width w per gram position (a single
+  * whole-row window when the row has ≤ w grams); minima compared in
+  * UNSIGNED 64-bit order; the fingerprint is the distinct selected minima
+  * sorted in SIGNED order. Soak and FingerprintSpec check every codec against a
+  * plain reference transcription of that definition.
   *
   * RLE fold: a run of r equal tokens is fed as min(r, k + w) tokens. The
   * first k-1 feeds are the transition grams (old ring content mixing out);
@@ -91,9 +92,7 @@ object WinnowMatch {
       if (gi > 0 && gi < w) emit(dqVal(dqHead % (w + 1)))
     }
 
-    /** Distinct selected minima in SIGNED ascending order — byte-identical
-      * to WinnowFingerprint's SortedSet[Long].toArray.
-      */
+    /** Distinct selected minima in SIGNED ascending order. */
     def fingerprint(): Array[Long] = {
       if (ns == 0) return Array.emptyLongArray
       val a = java.util.Arrays.copyOf(sel, ns)

@@ -133,25 +133,16 @@ object Delete {
     if (nDel == c.row_count) return None
     val offs = Offsets.unpack(c.offsets, c.row_count)
     val keptCount = c.row_count - nDel
-    // id-slab splice (no per-row String materialization except the first)
+    // id-slab splice: kept records copy verbatim, no per-row String
     val idsOut = new ByteWriter(c.doc_ids.length)
-    var firstId: String = null
-    val ir = new ByteReader(c.doc_ids, 0, c.doc_ids.length)
+    val ids = new PackedIds.Cursor(c.doc_ids)
     var i = 0
     while (i < c.row_count) {
-      val entryStart = ir.pos
-      val len = ir.readVarUInt()
-      val strStart = ir.pos
-      ir.pos += len
-      if (!del(i)) {
-        idsOut.writeBytes(c.doc_ids, entryStart, ir.pos - entryStart)
-        if (firstId == null)
-          firstId = new String(c.doc_ids, strStart, len,
-            java.nio.charset.StandardCharsets.UTF_8)
-      }
+      if (del(i)) ids.skip() else ids.copyNext(idsOut)
       i += 1
     }
     val idsPacked = idsOut.toBytes
+    val firstId = new PackedIds.Cursor(idsPacked).next().toString
     val rewritten = c.codec match {
       case DictCodec.name => deleteDict(c, offs, del, keptCount, idsPacked, firstId)
       case _ =>

@@ -134,6 +134,13 @@ object PackedIds {
       val len = readLen()
       pos += len
     }
+
+    /** Append the next record, length prefix included, to `out` unchanged. */
+    def copyNext(out: graft.core.ByteWriter): Unit = {
+      val start = pos
+      skip()
+      out.writeBytes(slab, start, pos - start)
+    }
   }
 }
 

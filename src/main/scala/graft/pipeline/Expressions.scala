@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.{ChunkWalker, MinHashMatch, SimHashMatch, WinnowMatch}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions._
@@ -22,36 +23,20 @@ object Hashing {
 }
 
 /** shingle_hashes(tokens, n): sorted distinct 64-bit hashes of all n-token
-  * shingles — the set representation for Jaccard/MinHash.
+  * shingles — the set representation for Jaccard/MinHash. The row runs
+  * through MinHashMatch's gram collector (zero signature lanes), the same
+  * sink the encoded path streams chunks through.
   */
 case class ShingleHashes(child: Expression, n: Int)
     extends UnaryExpression with CodegenFallback {
-  require(n >= 1)
+  require(n >= 1, s"shingle length must be >= 1, got $n")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "shingle_hashes"
+  // scratch sink reset per row; an expression instance runs in one task thread
+  @transient private lazy val acc = new MinHashMatch.SigAcc(n, 0, 0L, collectGrams = true)
   override protected def nullSafeEval(v: Any): Any = {
-    val toks = v.asInstanceOf[ArrayData].toIntArray()
-    if (toks.length < n) return new GenericArrayData(Array.empty[Long])
-    val out = new Array[Long](toks.length - n + 1)
-    var i = 0
-    while (i <= toks.length - n) {
-      var h = 0xcbf29ce484222325L
-      var j = 0
-      while (j < n) { h = Hashing.mix64(h ^ toks(i + j)); j += 1 }
-      out(i) = h
-      i += 1
-    }
-    // sort-then-unique == distinct-then-sort on primitives, without the
-    // boxed per-row HashSet that Array.distinct allocates
-    java.util.Arrays.sort(out)
-    var w = if (out.isEmpty) 0 else 1
-    i = 1
-    while (i < out.length) {
-      if (out(i) != out(w - 1)) { out(w) = out(i); w += 1 }
-      i += 1
-    }
-    new GenericArrayData(
-      if (w == out.length) out else java.util.Arrays.copyOf(out, w))
+    ChunkWalker.walkRow(0, v.asInstanceOf[ArrayData].toIntArray(), acc)
+    new GenericArrayData(acc.gramSet())
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -85,112 +70,37 @@ case class MinHashSig(child: Expression, k: Int, seed: Long)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** simhash64(tokens): 64-bit SimHash over unigram token hashes. */
+/** simhash64(tokens): 64-bit SimHash over unigram token hashes, computed by
+  * SimHashMatch's majority-vote sink (the encoded path's sink).
+  */
 case class SimHash64(child: Expression)
     extends UnaryExpression with CodegenFallback {
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash64"
+  // scratch sink reset per row; an expression instance runs in one task thread
+  @transient private lazy val acc = new SimHashMatch.SimAcc
   override protected def nullSafeEval(v: Any): Any = {
-    val toks = v.asInstanceOf[ArrayData].toIntArray()
-    // SWAR bit votes: the per-bit tally acc(b) = Σ(±1) equals
-    // 2·bitCnt(b) − n, so sig bit b is set iff 2·bitCnt(b) > n. Eight
-    // 8-lane byte counters batch up to 255 hashes with 8 shift-mask-adds
-    // per token instead of a 64-step per-bit loop — same integers, same
-    // signature.
-    val bitCnt = new Array[Long](64)
-    val sw = new Array[Long](8)
-    var batch = 0
-    def flush(): Unit = {
-      var w = 0
-      while (w < 8) {
-        val s = sw(w)
-        var j = 0
-        while (j < 8) { bitCnt(8 * j + w) += (s >>> (8 * j)) & 0xffL; j += 1 }
-        sw(w) = 0L
-        w += 1
-      }
-      batch = 0
-    }
-    var i = 0
-    while (i < toks.length) {
-      val h = Hashing.mix64(toks(i).toLong)
-      val m = 0x0101010101010101L
-      sw(0) += h & m
-      sw(1) += (h >>> 1) & m
-      sw(2) += (h >>> 2) & m
-      sw(3) += (h >>> 3) & m
-      sw(4) += (h >>> 4) & m
-      sw(5) += (h >>> 5) & m
-      sw(6) += (h >>> 6) & m
-      sw(7) += (h >>> 7) & m
-      batch += 1
-      if (batch == 255) flush()
-      i += 1
-    }
-    if (batch > 0) flush()
-    val n = toks.length.toLong
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (2L * bitCnt(b) > n) sig |= (1L << b); b += 1 }
-    java.lang.Long.valueOf(sig)
+    ChunkWalker.walkRow(0, v.asInstanceOf[ArrayData].toIntArray(), acc)
+    java.lang.Long.valueOf(acc.sig)
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
 /** winnow_fingerprint(tokens, k, w): winnowing document fingerprint —
   * k-gram rolling hashes, minimum per window of w, distinct sorted. Standard
-  * winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03) over the token alphabet.
+  * winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03) over the token alphabet,
+  * computed by WinnowMatch's sliding-minimum sink (the encoded path's sink).
   */
 case class WinnowFingerprint(child: Expression, k: Int, w: Int)
     extends UnaryExpression with CodegenFallback {
+  require(k >= 1 && w >= 1, s"winnowing needs k >= 1 and w >= 1, got k=$k w=$w")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fingerprint"
+  // scratch sink reset per row; an expression instance runs in one task thread
+  @transient private lazy val acc = new WinnowMatch.FpAcc(k, w)
   override protected def nullSafeEval(v: Any): Any = {
-    val toks = v.asInstanceOf[ArrayData].toIntArray()
-    if (toks.length < k) return new GenericArrayData(Array.empty[Long])
-    val m = toks.length - k + 1
-    val hashes = new Array[Long](m)
-    var i = 0
-    while (i < m) {
-      var h = 0xcbf29ce484222325L
-      var j = 0
-      while (j < k) { h = Hashing.mix64(h ^ toks(i + j)); j += 1 }
-      hashes(i) = h
-      i += 1
-    }
-    val lastWin = math.max(m - w, 0)
-    val mins = new Array[Long](lastWin + 1)
-    var nm = 0
-    var win = 0
-    while (win <= lastWin) {
-      // minimum in UNSIGNED 64-bit order (hashes are unsigned values carried
-      // in signed longs; -1L is the unsigned maximum) — keeps the selection
-      // rule identical to any standard-integer reimplementation (the SQL
-      // oracle compares UBIGINT).
-      var min = -1L
-      var j = win
-      val end = math.min(win + w, m)
-      while (j < end) {
-        if (java.lang.Long.compareUnsigned(hashes(j), min) < 0) min = hashes(j)
-        j += 1
-      }
-      // consecutive windows usually share a min; dedup the rest below
-      if (nm == 0 || mins(nm - 1) != min) { mins(nm) = min; nm += 1 }
-      win += 1
-    }
-    // sorted distinct in SIGNED order, matching the previous SortedSet[Long]
-    // iteration order (the oracle sorts the SET; order within the array is
-    // an implementation detail pinned by the tests)
-    val sel = java.util.Arrays.copyOf(mins, nm)
-    java.util.Arrays.sort(sel)
-    var wout = if (sel.length == 0) 0 else 1
-    var i2 = 1
-    while (i2 < sel.length) {
-      if (sel(i2) != sel(wout - 1)) { sel(wout) = sel(i2); wout += 1 }
-      i2 += 1
-    }
-    new GenericArrayData(
-      if (wout == sel.length) sel else java.util.Arrays.copyOf(sel, wout))
+    ChunkWalker.walkRow(0, v.asInstanceOf[ArrayData].toIntArray(), acc)
+    new GenericArrayData(acc.fingerprint())
   }
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }

@@ -56,45 +56,13 @@ case class DecodeRow(enc: Expression, header: Expression, codecName: Expression)
     copy(enc = f, header = s, codecName = t)
 }
 
-/** Partial decode of a row's first k tokens (read-side head projection):
-  * the pushdown rule rewrites `slice(decode_row(…), 1, k)` into this, so
-  * head-of-document features on the encoded view decode O(k) tokens per
-  * row instead of the whole row — the read-side dual of encode.Truncate.
-  */
-case class DecodeHead(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends RowDecodeExpression {
-  override def prettyName: String = "decode_head"
-  // head decoder per (codec, header): header parsed once per chunk
-  @transient private lazy val decoders = new CodecHeaderCache(HeadDecode.decoder)
-  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
-    decoders.get(codec, h).decodeHead(e, 0, e.length, k)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
-}
-
-/** Partial decode of a row's LAST k tokens (read-side tail projection):
-  * the pushdown rule rewrites `slice(decode_row(…), −k, k)` into this —
-  * exact builtin semantics incl. rows shorter than k slicing to empty.
-  * FSST skips to the cut via code lengths without expanding symbols (the
-  * suffix matcher's skip phase); packed codecs random-access the bit
-  * stream at index n−k.
-  */
-case class DecodeTail(enc: Expression, header: Expression, codecName: Expression, k: Int)
-    extends RowDecodeExpression {
-  override def prettyName: String = "decode_tail"
-  @transient private lazy val decoders = new CodecHeaderCache(TailDecode.decoder)
-  protected def decode(e: Array[Byte], h: Array[Byte], codec: String): Array[Int] =
-    decoders.get(codec, h).decodeTail(e, 0, e.length, k)
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression) =
-    copy(enc = f, header = s, codecName = t)
-}
-
-/** Partial decode of an arbitrary mid window (read-side slice projection):
-  * the pushdown rule rewrites `slice(decode_row(…), s, k)` for ANY nonzero
-  * literal start into this — exact builtin semantics (negative start from
-  * the end, out-of-range start → empty, window clipped at the row end).
-  * Generalizes DecodeHead/DecodeTail: fixed-stride model-input windows on
-  * the encoded view decode O(skip + k) per row, never the whole row.
+/** Partial decode of one window of a row (read-side slice projection): the
+  * pushdown rule rewrites `slice(decode_row(…), s, k)` for any nonzero
+  * literal start into this, with exact builtin semantics (negative start
+  * from the end, out-of-range start → empty, window clipped at the row
+  * end). Head (s = 1), tail (s = −k) and fixed-stride model-input windows
+  * on the encoded view decode O(skip + k) per row, never the whole row —
+  * the read-side dual of encode.Truncate.
   */
 case class DecodeSlice(enc: Expression, header: Expression, codecName: Expression,
                        s: Int, k: Int) extends RowDecodeExpression {
@@ -406,6 +374,7 @@ case class ContentHashesGenerator(children: Seq[Expression]) extends DocRowsGene
   */
 case class MinHashRowsGenerator(children: Seq[Expression], shingleN: Int, numHashes: Int,
                                 seed: Long, collectGrams: Boolean) extends DocRowsGenerator {
+  require(shingleN >= 1, s"shingle length must be >= 1, got $shingleN")
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("grams", ArrayType(LongType, containsNull = false), nullable = false),
@@ -456,6 +425,7 @@ case class SimHashRowsGenerator(children: Seq[Expression]) extends DocRowsGenera
   */
 case class WinnowRowsGenerator(children: Seq[Expression], k: Int, w: Int)
     extends DocRowsGenerator {
+  require(k >= 1 && w >= 1, s"winnowing needs k >= 1 and w >= 1, got k=$k w=$w")
   override def elementSchema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = false),
     StructField("fingerprint", ArrayType(LongType, containsNull = false), nullable = false)))

@@ -28,27 +28,14 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
       CompressedMatch(enc, header, codec, pred)
     // length pushdown: every codec writes a varUInt(n) row prefix, so
     // size(tokens) on the encoded view reads the prefix instead of decoding
-    case org.apache.spark.sql.catalyst.expressions.Size(DecodeRow(enc, _, _), _) =>
+    case Size(DecodeRow(enc, _, _), _) =>
       RowTokenCount(enc)
-    // head pushdown: every codec's payload is prefix-structured, so
-    // slice(tokens, 1, k) decodes only the first k tokens of each row
-    case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(1),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if k >= 0 =>
-      DecodeHead(enc, header, codec, k)
-    // tail pushdown: slice(tokens, −k, k) = the last k tokens (empty when
-    // the row is shorter — builtin semantics), decoded by skipping to the
-    // cut in the code/bit stream
-    case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(s),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if s < 0 && k == -s =>
-      DecodeTail(enc, header, codec, k)
-    // general mid-window pushdown: slice(tokens, s, k) for any other nonzero
-    // literal start decodes O(skip + k) per row (s == 0 / k < 0 raise in the
-    // builtin at runtime — leave those to it)
-    case org.apache.spark.sql.catalyst.expressions.Slice(DecodeRow(enc, header, codec),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(s),
-        org.apache.spark.sql.catalyst.expressions.IntegerLiteral(k)) if s != 0 && k >= 0 =>
+    // window pushdown: slice(tokens, s, k) with a literal nonzero start
+    // (head s = 1, tail s = −k, any mid window) decodes O(skip + k) tokens
+    // per row (s == 0 / k < 0 raise in the builtin at runtime — leave those
+    // to it)
+    case Slice(DecodeRow(enc, header, codec), IntegerLiteral(s), IntegerLiteral(k))
+        if s != 0 && k >= 0 =>
       DecodeSlice(enc, header, codec, s, k)
   }
 
@@ -59,7 +46,7 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
     * twice, so `slice(tokens, 1, k)` + `slice(tokens, −k, k)` over the
     * encoded view keeps `decode_row(…) AS tokens` in a lower Project and the
     * slices see only the attribute. This case substitutes the decode alias
-    * into REWRITABLE uses only (slice-head/tail, size) — sound duplication,
+    * into REWRITABLE uses only (slice, size) — sound duplication,
     * because each substituted use immediately rewrites to a partial/prefix
     * read strictly cheaper than the shared full decode — and leaves every
     * other use on the shared alias untouched. The lower Project grows
@@ -82,14 +69,6 @@ object PushPatternIntoCompressed extends Rule[LogicalPlan] {
           d
         }
         val newParent = parentList.map(_.transform {
-          case Slice(ar: AttributeReference, IntegerLiteral(1), IntegerLiteral(k))
-              if k >= 0 && decodeAliases.contains(ar.exprId) =>
-            val d = bind(ar)
-            DecodeHead(d.enc, d.header, d.codecName, k)
-          case Slice(ar: AttributeReference, IntegerLiteral(s), IntegerLiteral(k))
-              if s < 0 && k == -s && decodeAliases.contains(ar.exprId) =>
-            val d = bind(ar)
-            DecodeTail(d.enc, d.header, d.codecName, k)
           case Slice(ar: AttributeReference, IntegerLiteral(s), IntegerLiteral(k))
               if s != 0 && k >= 0 && decodeAliases.contains(ar.exprId) =>
             val d = bind(ar)
@@ -175,10 +154,6 @@ object Graft {
     predicateFn("any_token_in_set", es => SetPredicate(litInts(es(1))))
     reg.createOrReplaceTempFunction("decode_row",
       es => DecodeRow(es(0), es(1), es(2)), "scala_udf")
-    reg.createOrReplaceTempFunction("decode_head",
-      es => DecodeHead(es(0), es(1), es(2), litInt(es(3))), "scala_udf")
-    reg.createOrReplaceTempFunction("decode_tail",
-      es => DecodeTail(es(0), es(1), es(2), litInt(es(3))), "scala_udf")
     reg.createOrReplaceTempFunction("decode_slice",
       es => DecodeSlice(es(0), es(1), es(2), litInt(es(3)), litInt(es(4))), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_sim",
@@ -186,8 +161,7 @@ object Graft {
     reg.createOrReplaceTempFunction("simhash64",
       es => graft.pipeline.SimHash64(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("shingle_hashes",
-      es => graft.pipeline.ShingleHashes(es(0),
-        es(1).eval().asInstanceOf[Int]), "scala_udf")
+      es => graft.pipeline.ShingleHashes(es(0), litInt(es(1))), "scala_udf")
     // remaining pipeline kernels, so every native expression is reachable
     // from spark.sql(...) — parameters must be foldable literals
     reg.createOrReplaceTempFunction("minhash_sig",

@@ -350,7 +350,7 @@ object PlanAudit {
       println("zone gate: stats.min_tok/max_tok in PushedFilters for " +
         "pattern/range/set scans and late materialization")
     }
-    println("=== [16] round-5 projection algebra: head/tail partial decode, truncate plan ===")
+    println("=== [16] round-5 projection algebra: head/tail window decode, truncate plan ===")
     locally {
       // head + tail + length in ONE projection over the shared decode alias:
       // CollapseProject refuses to inline a non-cheap alias used repeatedly,
@@ -360,11 +360,17 @@ object PlanAudit {
         expr("slice(tokens, 1, 8)").as("head"),
         expr("slice(tokens, -8, 8)").as("tail"),
         size(col("tokens")).as("n"))
-      val p = q.queryExecution.optimizedPlan.toString
-      require(p.contains("decode_head") && p.contains("decode_tail") &&
-        p.contains("row_token_count") && !p.contains("decode_row"),
-        s"head/tail/length over one shared alias must all push; no decode_row:\n$p")
-      println("projection: decode_head + decode_tail + row_token_count, decode_row pruned")
+      val plan = q.queryExecution.optimizedPlan
+      val windows = plan.flatMap(_.expressions.flatMap(_.collect {
+        case d: graft.query.DecodeSlice => (d.s, d.k)
+      }))
+      val counts = plan.flatMap(_.expressions.flatMap(_.collect {
+        case r: graft.query.RowTokenCount => r
+      }))
+      require(windows.sorted == Seq((-8, 8), (1, 8)) && counts.size == 1 &&
+        !plan.toString.contains("decode_row"),
+        s"head/tail/length over one shared alias must all push; no decode_row:\n$plan")
+      println("projection: decode_slice (1, 8) + (-8, 8) + row_token_count, decode_row pruned")
 
       // truncation: a per-chunk typed map like scrub — zero exchanges
       val trp = graft.encode.Truncate.truncate(chunks, 48).toDF()

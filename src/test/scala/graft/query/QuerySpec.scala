@@ -408,10 +408,39 @@ class QuerySpec extends AnyFunSuite {
       "SELECT minhash_sig(shingle_hashes(tokens, 3), CAST(16 AS SMALLINT), CAST(42 AS SMALLINT)) AS mh " +
         "FROM raw_docs ORDER BY doc_id LIMIT 1").head()
     assert(smallintRow.getSeq[Long](0) == apiRow.getSeq[Long](0))
+    // ... the shingle length too (BIGINT and SMALLINT n)
+    for (n <- Seq("3L", "CAST(3 AS SMALLINT)")) {
+      val nRow = spark.sql(s"SELECT minhash_sig(shingle_hashes(tokens, $n), 16, 42L) AS mh " +
+        "FROM raw_docs ORDER BY doc_id LIMIT 1").head()
+      assert(nRow.getSeq[Long](0) == apiRow.getSeq[Long](0), s"shingle_hashes n = $n")
+    }
+    val nonLit = intercept[Exception] {
+      spark.sql("SELECT shingle_hashes(tokens, size(tokens)) FROM raw_docs LIMIT 1").collect()
+    }
+    assert(nonLit.getMessage.contains("must be a literal"), nonLit.getMessage)
     val err = intercept[Exception] {
       spark.sql("SELECT minhash_sig(shingle_hashes(tokens, 3), 16, 'x') FROM raw_docs LIMIT 1").collect()
     }
     assert(err.getMessage.contains("integer literal"), err.getMessage)
+  }
+
+  test("fingerprint parameters out of range are refused when the expression is built") {
+    import graft.pipeline.PipelineFunctions
+    import spark.implicits._
+    // no action runs: an empty chunk table only resolves the generators
+    val empty = spark.emptyDataset[graft.format.EncodedChunk].toDF()
+    def refused(what: String)(build: => Any): Unit = {
+      val err = intercept[IllegalArgumentException](build)
+      assert(err.getMessage.contains(">= 1"), s"$what: ${err.getMessage}")
+    }
+    refused("winnowRowsEncoded w = 0")(Graft.winnowRowsEncoded(empty, 3, 0))
+    refused("winnowRowsEncoded k = 0")(Graft.winnowRowsEncoded(empty, 0, 4))
+    refused("minhashRowsEncoded n = 0")(
+      Graft.minhashRowsEncoded(empty, shingleN = 0, numHashes = 8, seed = 1L))
+    refused("gramRowsEncoded n = 0")(Graft.gramRowsEncoded(empty, 0))
+    refused("winnowFingerprint w = 0")(PipelineFunctions.winnowFingerprint(col("tokens"), 3, 0))
+    refused("winnowFingerprint k = 0")(PipelineFunctions.winnowFingerprint(col("tokens"), 0, 4))
+    refused("shingleHashes n = 0")(PipelineFunctions.shingleHashes(col("tokens"), 0))
   }
 
   test("late materialization decodes exactly the matching rows (InternalRow path)") {
@@ -776,21 +805,27 @@ class QuerySpec extends AnyFunSuite {
       assert(want.except(got).isEmpty && got.except(want).isEmpty,
         s"$codecName: head/tail projection differs from decoded-domain slice")
     }
-    // the rewrites must fire: decode_head + decode_tail, no decode_row
-    val q = Graft.encodedRows(chunks)
-      .select(expr(s"slice(tokens, 1, $k)"), expr(s"slice(tokens, -$kt, $kt)"))
-    val optimized = q.queryExecution.optimizedPlan.toString()
-    assert(optimized.contains("decode_head") && optimized.contains("decode_tail"),
-      s"expected decode_head and decode_tail in optimized plan:\n$optimized")
-    assert(!optimized.contains("decode_row"),
-      s"decode_row should have been eliminated by the head/tail rewrites:\n$optimized")
-    // SQL surface: the registered functions agree with the column API
+    // the rewrites must fire over the shared decode alias: exactly the two
+    // windows as decode_slice plus row_token_count for size, no decode_row
+    val q = Graft.encodedRows(chunks).select(expr(s"slice(tokens, 1, $k)"),
+      expr(s"slice(tokens, -$kt, $kt)"), size(col("tokens")))
+    val plan = q.queryExecution.optimizedPlan
+    val windows = plan.flatMap(_.expressions.flatMap(_.collect {
+      case d: DecodeSlice => (d.s, d.k)
+    }))
+    val counts = plan.flatMap(_.expressions.flatMap(_.collect { case r: RowTokenCount => r }))
+    assert(windows.sorted == Seq((-kt, kt), (1, k)) && counts.size == 1,
+      s"expected decode_slice (1, $k) and (-$kt, $kt) plus one row_token_count:\n$plan")
+    assert(!plan.toString.contains("decode_row"),
+      s"decode_row should have been eliminated by the head/tail rewrites:\n$plan")
+    // SQL surface: decode_slice with the head and tail windows agrees with
+    // the column API
     Graft.encodedRows(chunks).createOrReplaceTempView("__head_view")
     val viaSql = spark.sql(
-      s"""SELECT doc_id, decode_head(enc, symtab, codec, $k) AS head,
-         |       decode_tail(enc, symtab, codec, $kt) AS tail FROM __head_view""".stripMargin)
+      s"""SELECT doc_id, decode_slice(enc, symtab, codec, 1, $k) AS head,
+         |       decode_slice(enc, symtab, codec, -$kt, $kt) AS tail FROM __head_view""".stripMargin)
     assert(want.except(viaSql).isEmpty && viaSql.except(want).isEmpty,
-      "SQL decode_head/decode_tail differ from the column-API slices")
+      "SQL decode_slice head/tail windows differ from the column-API slices")
   }
 
   test("sentinel injection: affix rewrites per codec, decode equals bos ++ tokens ++ eos") {
@@ -844,8 +879,7 @@ class QuerySpec extends AnyFunSuite {
       assert(want.except(got).isEmpty && got.except(want).isEmpty,
         s"$codecName: mid-window slice differs from decoded-domain builtin slice")
     }
-    // the rewrite must fire: decode_slice, no decode_row (and not head/tail,
-    // which own their own specialized windows)
+    // the rewrite must fire: decode_slice, no decode_row
     val q = Graft.encodedRows(chunks)
       .select(expr("slice(tokens, 5, 9)"), expr("slice(tokens, -40, 6)"))
     val optimized = q.queryExecution.optimizedPlan.toString()

@@ -513,8 +513,9 @@ object Soak {
         }, 2000)
     }
 
-    // read-side head projection: partial decode of the first k tokens must
-    // equal full-decode + take for every codec, on the same encoded bytes
+    // read-side head/tail projections (the windows the rewrite produces for
+    // slice(tokens, 1, k) and slice(tokens, −k, k)): the slice decoder must
+    // equal take(k), and for k >= 1 the builtin tail, on every codec
     for (codec <- Codecs.all) {
       check(s"head-vs-oracle-${codec.name}",
         Prop.forAll(Gen.listOfN(15, genToks), Gen.choose(0, 80)) { (rowsL, k) =>
@@ -530,17 +531,16 @@ object Soak {
             val offs = new Array[Int](rows.length + 1)
             rows.zipWithIndex.foreach { case (r, i) => enc.encode(r, out); offs(i + 1) = out.size }
             val data = out.toBytes
-            val hd = HeadDecode.decoder(codec.name, header)
-            val td = TailDecode.decoder(codec.name, header)
+            val sd = SliceDecode.decoder(codec.name, header)
             rows.indices.forall { i =>
               // tail oracle = builtin slice(arr, −k, k): EMPTY when the row
               // is shorter than k
               val wantTail =
                 if (rows(i).length >= k) rows(i).takeRight(k) else Array.emptyIntArray
               java.util.Arrays.equals(
-                hd.decodeHead(data, offs(i), offs(i + 1), k), rows(i).take(k)) &&
-                java.util.Arrays.equals(
-                  td.decodeTail(data, offs(i), offs(i + 1), k), wantTail)
+                sd.decodeSlice(data, offs(i), offs(i + 1), 1, k), rows(i).take(k)) &&
+                (k == 0 || java.util.Arrays.equals(
+                  sd.decodeSlice(data, offs(i), offs(i + 1), -k, k), wantTail))
             }
           }
         }, 2000)
@@ -763,21 +763,14 @@ object Soak {
     }, 200)
 
     // compressed-domain minhash: per-codec rolling-window kernels vs the
-    // ShingleHashes + MinHashSig expressions on the decoded array — gram
+    // reference shingle and MinHash definitions on the decoded array — gram
     // sets and every signature lane bit-identical (exercises the RLE
     // saturated-window fold and the FSST symbol-run feed)
     locally {
-      import org.apache.spark.sql.catalyst.expressions.Literal
-      import org.apache.spark.sql.catalyst.util.ArrayData
-      import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+      import graft.pipeline.ReferenceFingerprints
       def mhOracle(toks: Array[Int], n: Int, k: Int, seed: Long): (Array[Long], Array[Long]) = {
-        val lit = Literal.create(toks, ArrayType(IntegerType, containsNull = false))
-        val grams = graft.pipeline.ShingleHashes(lit, n)
-          .eval(null).asInstanceOf[ArrayData].toLongArray()
-        val sig = graft.pipeline.MinHashSig(
-            Literal.create(grams, ArrayType(LongType, containsNull = false)), k, seed)
-          .eval(null).asInstanceOf[ArrayData].toLongArray()
-        (grams, sig)
+        val grams = ReferenceFingerprints.shingles(toks, n)
+        (grams, ReferenceFingerprints.minhash(grams, k, seed))
       }
       for (codec <- Codecs.all) {
         check(s"minhash-vs-oracle-${codec.name}",
@@ -805,12 +798,9 @@ object Soak {
           }, 1000)
       }
       // compressed-domain simhash: per-codec unigram majority-vote kernels
-      // vs the SimHash64 expression on the decoded array (exercises the RLE
-      // ±r run fold and the FSST symbol-run feed)
-      def shOracle(toks: Array[Int]): Long = {
-        val lit = Literal.create(toks, ArrayType(IntegerType, containsNull = false))
-        graft.pipeline.SimHash64(lit).eval(null).asInstanceOf[Long]
-      }
+      // vs the reference SimHash definition on the decoded array (exercises
+      // the RLE ±r run fold and the FSST symbol-run feed)
+      def shOracle(toks: Array[Int]): Long = ReferenceFingerprints.simhash(toks)
       for (codec <- Codecs.all) {
         check(s"simhash-vs-oracle-${codec.name}",
           Prop.forAll(Gen.listOfN(12, genToks)) { rowsL =>
@@ -848,14 +838,11 @@ object Soak {
       }, 100)
 
       // compressed-domain winnowing: per-codec rolling k-gram + sliding
-      // window-min kernels vs the WinnowFingerprint expression on the
+      // window-min kernels vs the reference winnowing definition on the
       // decoded array (exercises the monotonic deque, the short-row single
       // window, the unsigned min order, and the RLE k+w prefix fold)
-      def wfOracle(toks: Array[Int], k: Int, w: Int): Array[Long] = {
-        val lit = Literal.create(toks, ArrayType(IntegerType, containsNull = false))
-        graft.pipeline.WinnowFingerprint(lit, k, w)
-          .eval(null).asInstanceOf[ArrayData].toLongArray()
-      }
+      def wfOracle(toks: Array[Int], k: Int, w: Int): Array[Long] =
+        ReferenceFingerprints.winnow(toks, k, w)
       for (codec <- Codecs.all) {
         check(s"winnow-vs-oracle-${codec.name}",
           Prop.forAll(Gen.listOfN(12, genToks), Gen.choose(1, 5), Gen.choose(1, 6)) {
